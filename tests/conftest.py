@@ -7,6 +7,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tric_spark.session import get_spark  # noqa: E402
 
+# Bound the heap of the test JVM and of every Spark subprocess a test starts
+# (they inherit this environment). At the library's 16g default the test JVM
+# grows lazily past what the tests need, and with a second JVM beside it
+# (test_entry's oracle subprocess) the host's OOM killer takes the test JVM,
+# failing every later test.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -45,21 +45,26 @@ def connected_components(
     # state, not the m-row edge table; min partial-aggregates map-side
     adj = out_adjacency(sym_edges.select("src", "dst")).cache()
 
-    def step(comps: DataFrame) -> DataFrame:
+    def step(comps: DataFrame, delta: bool = False) -> DataFrame:
         nbr_min = (
             adj.join(comps, "vid")
             .select(F.explode("nbrs").alias("vid"), "comp")
             .groupBy("vid")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        return (
-            comps.join(nbr_min, "vid", "left")
-            .select(
-                "vid",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                ).alias("comp"),
-            )
+        new = F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp")))
+        # ``delta``: the driver's convergence column — did this row change
+        out = [(new != F.col("comp")).alias("_delta")] if delta else []
+        return comps.join(nbr_min, "vid", "left").select(
+            "vid", new.alias("comp"), *out
+        )
+
+    if driver is not None:
+        return driver.run(
+            init=comps,
+            step=lambda c: step(c, delta=True),
+            max_iter=max_iter,
+            converged=lambda changed: changed == 0,
         )
 
     def _sig(df: DataFrame) -> int:
@@ -67,30 +72,6 @@ def connected_components(
         return df.agg(
             F.sum(F.pmod(F.col("comp"), F.lit(1_000_000_007)))
         ).collect()[0][0]
-
-    def converged(old: DataFrame, new: DataFrame, _i: int) -> bool:
-        # two-tier: hash-min comps only decrease, so an unchanged cheap
-        # aggregate signature is a *candidate* fixpoint; confirm exactly
-        # with the join only then. Most supersteps pay one aggregate, not
-        # a join+filter+count.
-        if _sig(new) != _sig(old):
-            return False
-        changed = (
-            old.withColumnRenamed("comp", "old_comp")
-            .join(new, "vid")
-            .filter(F.col("comp") != F.col("old_comp"))
-            .count()
-        )
-        return changed == 0
-
-    if driver is not None:
-        return driver.run(
-            init=comps,
-            step=step,
-            converged=converged,
-            max_iter=max_iter,
-            state_schema="vid long, comp long",
-        )
 
     # per block of `check_every` lazy supersteps: ONE checkpoint + ONE
     # signature aggregate (the previous block's signature is remembered,

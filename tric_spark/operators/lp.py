@@ -55,13 +55,7 @@ def label_propagation(
         )
 
     if driver is not None:
-        return driver.run(
-            init=labels,
-            step=step,
-            converged=lambda *_: False,
-            max_iter=num_iter,
-            state_schema="vid long, label long",
-        )
+        return driver.run(init=labels, step=step, max_iter=num_iter)
 
     # checkpoint per superstep, deliberately NOT chained: the LP step
     # references its input twice (contribution join + isolated-vertex

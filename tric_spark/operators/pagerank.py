@@ -169,9 +169,29 @@ def pagerank(
         )
     else:
         ranks = vertices.withColumn("rank", F.lit(1.0 / n))
-    state_schema = "vid long, rank double"
 
-    def step(rk: DataFrame) -> DataFrame:
+    def emit(
+        rk: DataFrame, mass: DataFrame, base, delta: bool, dang: DataFrame | None = None
+    ) -> DataFrame:
+        # the output join runs from rk.select("vid", ...), NOT the cached
+        # verts frame: the checkpointed rk is already hash-partitioned on
+        # vid, so the left join plans exchange-free against the mass
+        # aggregate; joining the cached verts instead re-sorts the cache
+        # scan every chain level (measured r4 A/B: 8.1 s vs 3.8 s for
+        # pagerank5 at sf0.1). ``delta`` carries the previous rank through
+        # the same projection and emits |rank − prev| as the driver's
+        # convergence column.
+        prev = [F.col("rank").alias("_prev")] if delta else []
+        rank = base + F.lit(d) * F.coalesce(F.col("in_mass"), F.lit(0.0))
+        out = [rank.alias("rank")]
+        if delta:
+            out.append(F.abs(rank - F.col("_prev")).alias("_delta"))
+        new = rk.select("vid", *prev).join(mass, "vid", "left")
+        if dang is not None:
+            new = new.crossJoin(F.broadcast(dang))
+        return new.select("vid", *out)
+
+    def step(rk: DataFrame, delta: bool = False) -> DataFrame:
         if not has_dangling:
             contribs = (
                 adj.join(rk, "vid")
@@ -182,19 +202,7 @@ def pagerank(
                 .groupBy("vid")
                 .agg(F.sum("c").alias("in_mass"))
             )
-            # rk.select("vid"), NOT the cached verts frame: the checkpointed
-            # rk is already hash-partitioned on vid from the previous block,
-            # so this left join plans exchange-free against the contribs
-            # aggregate; joining the cached verts instead re-sorts the cache
-            # scan every chain level (measured r4 A/B: 8.1 s vs 3.8 s for
-            # pagerank5 at sf0.1)
-            return rk.select("vid").join(contribs, "vid", "left").select(
-                "vid",
-                (
-                    F.lit((1.0 - d) / n)
-                    + F.lit(d) * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ).alias("rank"),
-            )
+            return emit(rk, contribs, F.lit((1.0 - d) / n), delta)
         # dangling path: rk joined ONCE against the cached adjacency;
         # explode_outer turns a dangling vertex (nbrs NULL) into one row
         # with a NULL target carrying its whole rank, so the single groupBy
@@ -230,25 +238,20 @@ def pagerank(
         dang = mass.filter(F.col("tvid").isNull()).agg(
             F.coalesce(F.sum("in_mass"), F.lit(0.0)).alias("_dm")
         )
-        # rk.select("vid") (checkpointed every superstep here — the chain
-        # gate) instead of the cached verts frame, for the same
-        # exchange-free join reason as the dangling-free branch
-        new = rk.select("vid").join(
-            mass.withColumnRenamed("tvid", "vid"), "vid", "left"
-        ).crossJoin(F.broadcast(dang))
+        # rk is checkpointed every superstep here (the chain gate), so the
+        # same exchange-free output join applies as in the dangling-free
+        # branch
         base = F.lit((1.0 - d) / n) + F.lit(d) * F.col("_dm") / F.lit(n)
-        return new.select(
-            "vid",
-            (base + F.lit(d) * F.coalesce(F.col("in_mass"), F.lit(0.0))).alias("rank"),
-        )
+        return emit(rk, mass.withColumnRenamed("tvid", "vid"), base, delta, dang)
 
     if driver is not None:
+        if tol <= 0:
+            return driver.run(init=ranks, step=step, max_iter=max_iter)
         return driver.run(
             init=ranks,
-            step=step,
-            converged=lambda old, new, _i: _block_delta(old, new) < tol,
+            step=lambda rk: step(rk, delta=True),
             max_iter=max_iter,
-            state_schema=state_schema,
+            converged=lambda dl: dl < tol,
         )
 
     return _iterate(ranks, step, tol, max_iter, chain, check_every)
