@@ -651,13 +651,12 @@ def q_ann_ivf_topk(spark, sf_dir):
 
 def q_pagerank_converged(spark, sf_dir):
     """Convergence-mode kernel run to a tolerance far below the 6dp output
-    rounding (block-delta < 1e-13 puts the iterate within ~6e-13 of the
+    rounding (max|Δrank| < 1e-13 puts the iterate within ~6e-13 of the
     fixpoint by the 0.85-contraction), so the oracle's deep unrolled power
     iteration — itself fixpoint to ~1e-17 after 220 rounds — rounds to the
-    same 6dp table. check_every=5 chains five lazy supersteps per
-    checkpoint+delta barrier."""
+    same 6dp table."""
     canon, sym, verts, deg = _graph_tables(spark, sf_dir)
-    r = pagerank(sym, verts, tol=1e-13, max_iter=250, check_every=5)
+    r = pagerank(sym, verts, tol=1e-13, max_iter=250)
     return r.select("vid", F.round("rank", 6).alias("rank"))
 
 

@@ -8,8 +8,8 @@ from fixtures import er_graph
 from oracles import cc_oracle
 
 from tric_spark import graph
-from tric_spark.operators import pagerank as pr_mod
 from tric_spark.operators.cc import connected_components
+from tric_spark.operators.lp import label_propagation
 from tric_spark.operators.pagerank import pagerank
 from tric_spark.streaming.supersteps import SuperstepDriver
 
@@ -66,7 +66,7 @@ def test_checkpointed_pagerank_matches_plain(spark, tmp_path):
     ck = {
         r.vid: r.rank
         for r in pagerank(
-            edges, verts, driver=SuperstepDriver(spark, str(tmp_path / "pr"), every=5)
+            edges, verts, driver=SuperstepDriver(spark, str(tmp_path / "pr"))
         ).collect()
     }
     assert set(plain) == set(ck)
@@ -115,14 +115,25 @@ def test_commit_meta_matches_data_in_one_job(spark, tmp_path, monkeypatch):
     assert [len(tracker.getJobIdsForGroup(g)) for g in groups] == [1] * len(groups)
 
 
+def _plain_and_checkpointed(spark, tmp_path, kernel):
+    """Run ``kernel(driver)`` on the plain loop (a driver without a
+    checkpoint dir, as every kernel uses by default) and under committed
+    checkpoints: (plain rows, plain supersteps, checkpointed rows, commits)."""
+    plain_drv = SuperstepDriver(spark)
+    plain = kernel(plain_drv).collect()
+    ckdir = str(tmp_path / "ck")
+    ck = kernel(SuperstepDriver(spark, ckdir)).collect()
+    return plain, len(plain_drv.counters), ck, _commits(ckdir)
+
+
 @pytest.mark.parametrize("dangling", [False, True])
 def test_checkpointed_pagerank_commits_match_plain_supersteps(
-    spark, tmp_path, monkeypatch, dangling
+    spark, tmp_path, dangling
 ):
-    """The driver's observed max|Δrank| stops at the same superstep as the
-    plain loop's per-superstep ``_block_delta`` join: one commit per plain
-    superstep plus the initial state, and no delta join of its own. With
-    tol=0 it runs exactly ``max_iter`` supersteps."""
+    """A plain run and a checkpointed run are the same superstep loop: the
+    observed max|Δrank| stops both at the same superstep (one commit per
+    plain superstep plus the initial state) with the same ranks. With tol=0
+    the checkpointed run commits exactly ``max_iter`` supersteps."""
     pairs = er_graph(n=40, p_inv=8)
     if dangling:
         # er_graph pairs have u < v, so as directed edges u → v every
@@ -131,29 +142,33 @@ def test_checkpointed_pagerank_commits_match_plain_supersteps(
         verts = spark.range(40).withColumnRenamed("id", "vid")
     else:
         edges, verts = _tables(spark, pairs)
-    calls = {"delta": 0}
-    orig = pr_mod._block_delta
-
-    def counting_delta(old, new):
-        calls["delta"] += 1
-        return orig(old, new)
-
-    monkeypatch.setattr(pr_mod, "_block_delta", counting_delta)
-    plain = {r.vid: r.rank for r in pagerank(edges, verts, tol=1e-6).collect()}
-    plain_steps, calls["delta"] = calls["delta"], 0
-
-    conv = str(tmp_path / "conv")
-    ck = {
-        r.vid: r.rank
-        for r in pagerank(
-            edges, verts, tol=1e-6, driver=SuperstepDriver(spark, conv)
-        ).collect()
-    }
-    assert calls["delta"] == 0
-    assert plain_steps > 2 and _commits(conv) == plain_steps + 1
+    plain, steps, ck, commits = _plain_and_checkpointed(
+        spark, tmp_path, lambda drv: pagerank(edges, verts, tol=1e-6, driver=drv)
+    )
+    assert steps > 2 and commits == steps + 1
+    plain, ck = dict(plain), dict(ck)
     assert set(ck) == set(plain)
     assert max(abs(plain[v] - ck[v]) for v in plain) < 1e-12
 
     fixed = str(tmp_path / "fixed")
     pagerank(edges, verts, tol=0.0, max_iter=4, driver=SuperstepDriver(spark, fixed))
     assert _commits(fixed) == 4 + 1
+
+
+def test_checkpointed_cc_and_lp_match_plain_supersteps(spark, tmp_path):
+    """CC's observed "label changed" stops the plain and the checkpointed
+    run at the same superstep with equal components; LP runs its fixed
+    supersteps on both paths with equal labels."""
+    pairs = er_graph(n=100, p_inv=60)
+    sym, verts = _tables(spark, pairs)
+    plain, steps, ck, commits = _plain_and_checkpointed(
+        spark, tmp_path / "cc", lambda drv: connected_components(sym, verts, driver=drv)
+    )
+    assert steps > 2 and commits == steps + 1
+    assert dict(plain) == dict(ck)
+
+    plain, steps, ck, commits = _plain_and_checkpointed(
+        spark, tmp_path / "lp", lambda drv: label_propagation(sym, verts, num_iter=3, driver=drv)
+    )
+    assert steps == 3 and commits == steps + 1
+    assert dict(plain) == dict(ck)

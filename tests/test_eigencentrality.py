@@ -66,7 +66,7 @@ def test_convergence_mode_matches_fixed(spark):
     conv = {
         r.vid: r.rank
         for r in eigenvector_centrality(
-            sym, verts, tol=1e-9, max_iter=100, check_every=4
+            sym, verts, tol=1e-9, max_iter=100
         ).collect()
     }
     want = _brute_trajectory(LOLLIPOP, 80)

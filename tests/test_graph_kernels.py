@@ -48,8 +48,8 @@ def test_pagerank_dangling_chains_without_per_step_actions(spark, monkeypatch):
     """VERDICT r2 #7 + ADVICE r3: the dangling mass is an in-plan broadcast
     1-row aggregate — zero collects ever — but chaining is GATED OFF on
     dangling graphs (r4 A/B: chained dangling blocks recompute through the
-    broadcast boundary, 42 s at chain=6 vs 5.8 s per-step), so a chain=3
-    request runs one checkpoint per superstep here."""
+    broadcast boundary, 42 s at chain=6 vs 5.8 s per-step), so a
+    fixed-iteration run checkpoints every superstep here."""
     directed = [(0, 1), (1, 2), (2, 0), (0, 3)]  # vertex 3 is a sink
     edges = edges_df(spark, directed)
     verts = spark.range(4).withColumnRenamed("id", "vid")
@@ -70,7 +70,7 @@ def test_pagerank_dangling_chains_without_per_step_actions(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
     monkeypatch.setattr(DataFrame, "localCheckpoint", counting_ckpt)
-    result = pagerank(edges, verts, tol=0.0, max_iter=3, chain=3)
+    result = pagerank(edges, verts, tol=0.0, max_iter=3)
     monkeypatch.undo()
 
     assert calls["collect"] == 0  # dangling mass never hits the driver
@@ -84,18 +84,6 @@ def test_pagerank_dangling_chains_without_per_step_actions(spark, monkeypatch):
     for r in result.collect():
         got[r.vid] = r.rank
     assert np.allclose(got, pagerank_oracle(directed, 4, max_iter=3, tol=0.0), atol=1e-9)
-
-
-def test_pagerank_check_every_matches_per_step_convergence(spark):
-    """check_every>1 chains supersteps between delta checks; the returned
-    fixpoint is the same (it can only run further past convergence)."""
-    pairs = er_graph(n=40, p_inv=8)
-    directed = [(u, v) for u, v in pairs] + [(v, u) for u, v in pairs if (u + v) % 3]
-    edges = edges_df(spark, directed)
-    verts = spark.range(40).withColumnRenamed("id", "vid")
-    a = {r.vid: r.rank for r in pagerank(edges, verts, tol=1e-9).collect()}
-    b = {r.vid: r.rank for r in pagerank(edges, verts, tol=1e-9, check_every=4).collect()}
-    assert np.allclose([a[i] for i in range(40)], [b[i] for i in range(40)], atol=1e-8)
 
 
 def test_cc_two_cliques(spark):
@@ -173,58 +161,71 @@ def test_weighted_pagerank_vs_oracle(spark):
         assert abs(w1[v] - u1[v]) < 1e-9
 
 
-def test_weighted_and_ppr_check_every_one_delta_action_per_block(spark, monkeypatch):
-    """VERDICT r3 #4: weighted and personalized PageRank share the chained
-    superstep loop — convergence mode runs exactly one delta action per
-    check_every block, and the chained fixpoint matches per-step."""
-    from conftest import edges_df
-
-    from tric_spark.operators import pagerank as pr_mod
+def _kernel_runs(spark):
+    """name → run(tol): each iterative kernel on a small graph, ``tol <= 0``
+    meaning a fixed 2-superstep run (CC, which has no tol, runs 1)."""
+    from tric_spark.operators.eigencentrality import eigenvector_centrality
+    from tric_spark.operators.katz import katz_centrality
     from tric_spark.operators.pagerank import personalized_pagerank, weighted_pagerank
+    from tric_spark.operators.trustrank import trustrank
 
-    # dangling-free (every vertex has out-links) — chaining stays active;
-    # dangling graphs gate chain/check_every to 1 (_chain_policy, measured)
-    directed = [(0, 1), (1, 2), (2, 0), (0, 3), (3, 4), (4, 0)]
-    verts = spark.range(5).withColumnRenamed("id", "vid")
-    triples = spark.createDataFrame(
-        [(u, v, 1.0 + (u + v) % 3) for u, v in directed],
-        "src long, dst long, weight double",
-    )
-    edges = edges_df(spark, directed)
-    seeds = spark.range(1).withColumnRenamed("id", "vid")
+    pairs = er_graph(n=30, p_inv=6)
+    canon, sym, verts = _graph_tables(spark, pairs)
+    sinks = edges_df(spark, pairs)  # u → v with u < v: the top vertices dangle
+    all_v = spark.range(30).withColumnRenamed("id", "vid")
+    sym_w = sym.withColumn("weight", (sym.src + sym.dst) % 3 + 1.0)
+    seeds = spark.range(3).withColumnRenamed("id", "vid")
 
-    calls = {"delta": 0}
-    orig = pr_mod._block_delta
+    def it(tol):
+        return 2 if tol <= 0 else 100
 
-    def counting_delta(old, new):
-        calls["delta"] += 1
-        return orig(old, new)
-
-    monkeypatch.setattr(pr_mod, "_block_delta", counting_delta)
-
-    per_step = {r.vid: r.rank for r in weighted_pagerank(triples, verts, tol=1e-10).collect()}
-    n_per_step = calls["delta"]
-    calls["delta"] = 0
-    chained = {
-        r.vid: r.rank
-        for r in weighted_pagerank(triples, verts, tol=1e-10, check_every=5).collect()
+    return {
+        "pagerank": lambda tol: pagerank(sym, verts, tol=tol, max_iter=it(tol)),
+        "pagerank_dangling": lambda tol: pagerank(sinks, all_v, tol=tol, max_iter=it(tol)),
+        "weighted": lambda tol: weighted_pagerank(sym_w, verts, tol=tol, max_iter=it(tol)),
+        "ppr": lambda tol: personalized_pagerank(sym, verts, seeds, tol=tol, max_iter=it(tol)),
+        "trustrank": lambda tol: trustrank(sym_w, verts, seeds, tol=tol, max_iter=it(tol)),
+        "katz": lambda tol: katz_centrality(sym, verts, alpha=0.05, tol=tol, max_iter=it(tol)),
+        "eigen": lambda tol: eigenvector_centrality(sym, verts, tol=tol, max_iter=it(tol)),
+        "cc": lambda tol: connected_components(sym, verts, max_iter=1 if tol <= 0 else 200),
     }
-    n_chained = calls["delta"]
-    assert n_chained <= -(-n_per_step // 5) + 1  # ≤ ceil(steps/5) (+1 slack)
-    assert np.allclose(
-        [per_step[i] for i in range(5)], [chained[i] for i in range(5)], atol=1e-8
-    )
 
-    calls["delta"] = 0
-    p1 = {r.vid: r.rank for r in personalized_pagerank(edges, verts, seeds, tol=1e-10).collect()}
-    n1 = calls["delta"]
-    calls["delta"] = 0
-    p2 = {
-        r.vid: r.rank
-        for r in personalized_pagerank(edges, verts, seeds, tol=1e-10, check_every=5).collect()
-    }
-    assert calls["delta"] <= -(-n1 // 5) + 1
-    assert np.allclose([p1[i] for i in range(5)], [p2[i] for i in range(5)], atol=1e-8)
+
+@pytest.mark.parametrize(
+    "kernel",
+    ["pagerank", "pagerank_dangling", "weighted", "ppr", "trustrank", "katz", "eigen", "cc"],
+)
+def test_convergence_mode_adds_no_driver_actions(spark, monkeypatch, kernel):
+    """Every iterative kernel runs the one superstep loop, whose convergence
+    test reads max(_delta) from an observation on the superstep's own
+    checkpoint: a run to convergence makes no more driver collect/count
+    calls than a fixed-iteration run of the same kernel, however many more
+    supersteps it takes."""
+    run = _kernel_runs(spark)[kernel]
+    DataFrame = type(spark.range(1))  # the concrete class, as above
+    calls = {"actions": 0, "ckpt": 0}
+    orig = {m: getattr(DataFrame, m) for m in ("collect", "count", "localCheckpoint")}
+
+    def counted(method, key):
+        def wrapper(self, *args, **kwargs):
+            calls[key] += 1
+            return orig[method](self, *args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(DataFrame, "collect", counted("collect", "actions"))
+    monkeypatch.setattr(DataFrame, "count", counted("count", "actions"))
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counted("localCheckpoint", "ckpt"))
+    counts = {}
+    for tol in (0.0, 1e-4):
+        calls.update(actions=0, ckpt=0)
+        run(tol)
+        counts[tol] = dict(calls)
+    monkeypatch.undo()
+
+    fixed, conv = counts[0.0], counts[1e-4]
+    assert conv["ckpt"] > fixed["ckpt"]  # converging took more supersteps
+    assert conv["actions"] <= fixed["actions"]
 
 
 def test_pagerank_warm_start(spark):

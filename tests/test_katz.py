@@ -50,7 +50,7 @@ def test_katz_convergence_matches_linear_solve(spark):
     closed = np.linalg.solve(np.eye(n) - alpha * A.T, np.full(n, 1.0))
     x = _run(
         spark, directed, n, alpha=float(alpha), beta=1.0, tol=1e-10,
-        max_iter=500, check_every=8,
+        max_iter=500,
     )
     assert np.allclose(x, closed, atol=1e-6)
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tric_spark.streaming.supersteps import SuperstepDriver
+from tric_spark.streaming.supersteps import DELTA, SuperstepDriver
 
 
 def connected_components(
@@ -25,19 +25,15 @@ def connected_components(
     vertices: DataFrame,
     max_iter: int = 200,
     driver: SuperstepDriver | None = None,
-    check_every: int = 1,
 ) -> DataFrame:
     """(vid, comp) at fixpoint. ``sym_edges`` must hold both directions.
 
-    ``check_every``: chain this many lazy supersteps per checkpoint +
-    signature barrier. Safe for hash-min (labels only decrease, so a
-    fixpoint reached mid-block stays fixed and the block-end comparison
-    still detects it); convergence detection lags by at most
-    ``check_every - 1`` no-op supersteps inside one lazy block. Default 1
-    (the CC step references its input twice, so chained steps recompute
-    part of the inner plan — a wash at local scale); raise it on
-    high-latency clusters where the per-superstep barrier, not the
-    recompute, is the non-scaling term."""
+    ``driver``: a checkpointing superstep driver for resumable runs;
+    without one the same loop runs without commits. Every superstep is
+    materialized: the step references its input twice, so chained steps
+    would recompute part of the inner plan. The fixpoint test is the
+    observed max of the step's "label changed" column — no signature
+    aggregate or old⋈new join."""
     from tric_spark.graph import out_adjacency
 
     comps = vertices.withColumn("comp", F.col("vid"))
@@ -45,7 +41,7 @@ def connected_components(
     # state, not the m-row edge table; min partial-aggregates map-side
     adj = out_adjacency(sym_edges.select("src", "dst")).cache()
 
-    def step(comps: DataFrame, delta: bool = False) -> DataFrame:
+    def step(comps: DataFrame) -> DataFrame:
         nbr_min = (
             adj.join(comps, "vid")
             .select(F.explode("nbrs").alias("vid"), "comp")
@@ -53,52 +49,17 @@ def connected_components(
             .agg(F.min("comp").alias("nbr_comp"))
         )
         new = F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp")))
-        # ``delta``: the driver's convergence column — did this row change
-        out = [(new != F.col("comp")).alias("_delta")] if delta else []
+        # the loop's convergence column: did this row change
         return comps.join(nbr_min, "vid", "left").select(
-            "vid", new.alias("comp"), *out
+            "vid", new.alias("comp"), (new != F.col("comp")).alias(DELTA)
         )
 
-    if driver is not None:
-        return driver.run(
-            init=comps,
-            step=lambda c: step(c, delta=True),
-            max_iter=max_iter,
-            converged=lambda changed: changed == 0,
-        )
-
-    def _sig(df: DataFrame) -> int:
-        # overflow-safe monotone-ish signature (pmod bounds terms under ANSI)
-        return df.agg(
-            F.sum(F.pmod(F.col("comp"), F.lit(1_000_000_007)))
-        ).collect()[0][0]
-
-    # per block of `check_every` lazy supersteps: ONE checkpoint + ONE
-    # signature aggregate (the previous block's signature is remembered,
-    # not recomputed — the old loop paid 3 driver actions per superstep)
-    cur = comps.localCheckpoint(eager=True)
-    prev_sig = _sig(cur)
-    done = 0
-    while done < max_iter:
-        block = min(check_every, max_iter - done)
-        nxt = cur
-        for _ in range(block):
-            nxt = step(nxt)
-        nxt = nxt.localCheckpoint(eager=True)
-        done += block
-        new_sig = _sig(nxt)
-        if new_sig == prev_sig:
-            # candidate fixpoint (signature can collide) — confirm exactly
-            changed = (
-                cur.withColumnRenamed("comp", "old_comp")
-                .join(nxt, "vid")
-                .filter(F.col("comp") != F.col("old_comp"))
-                .count()
-            )
-            if changed == 0:
-                return nxt
-        cur, prev_sig = nxt, new_sig
-    return cur
+    return (driver or SuperstepDriver(vertices.sparkSession)).run(
+        init=comps,
+        step=step,
+        max_iter=max_iter,
+        converged=lambda changed: changed == 0,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -14,9 +14,9 @@ map-side-combined groupBy-sum → left join back onto the checkpointed
 state's vid column, then an L2-norm 1-row aggregate broadcast-divided
 back in. That norm is a broadcast boundary inside the step, so supersteps
 must NOT chain (the measured dangling-PageRank lesson — a chained block
-recomputes the inner plan once per broadcast level); this kernel pins
-chain=1 and shares :func:`pagerank._iterate` for the checkpoint/
-convergence discipline.
+recomputes the inner plan once per broadcast level); this kernel runs the
+one superstep loop through ``pagerank._power_run`` unchained, and its
+convergence column is |rank − prev| after normalisation.
 
 At 10^12 vertices: one double per vertex of state, adjacency cached once,
 one co-located shuffle + one scalar aggregate per superstep — PageRank's
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tric_spark.operators.pagerank import _iterate
+from tric_spark.operators.pagerank import _power_run, _rank_cols, _with_prev
 
 
 def eigenvector_centrality(
@@ -36,7 +36,6 @@ def eigenvector_centrality(
     vertices: DataFrame,
     tol: float = 1e-6,
     max_iter: int = 100,
-    check_every: int = 1,
 ) -> DataFrame:
     """(vid, rank) with ‖rank‖₂ = 1. ``sym_edges`` is the symmetrized
     undirected edge list (both directions present). ``tol=0`` runs exactly
@@ -58,15 +57,15 @@ def eigenvector_centrality(
             .groupBy("vid")
             .agg(F.sum("c").alias("s"))
         )
-        s = rk.select("vid").join(contrib, "vid", "left").select(
-            "vid", F.coalesce("s", F.lit(0.0)).alias("r")
+        s = _with_prev(rk).join(contrib, "vid", "left").select(
+            "vid", "_prev", F.coalesce("s", F.lit(0.0)).alias("r")
         )
         nrm = s.agg(F.sqrt(F.sum(F.col("r") * F.col("r"))).alias("nrm"))
         return s.crossJoin(F.broadcast(nrm)).select(
-            "vid", (F.col("r") / F.col("nrm")).alias("rank")
+            "vid", *_rank_cols(F.col("r") / F.col("nrm"))
         )
 
-    # chain pinned to 1: the norm broadcast inside the step would make a
-    # chained block re-execute the inner supersteps per level (measured on
-    # the sibling dangling-PageRank fold, BENCH.md r4)
-    return _iterate(init, step, tol, max_iter, 1, check_every)
+    # unchained: the norm broadcast inside the step would make a chained
+    # block re-execute the inner supersteps per level (measured on the
+    # sibling dangling-PageRank fold, BENCH.md r4)
+    return _power_run(init, step, tol, max_iter, chain=1)

@@ -25,7 +25,9 @@ are NOT chained (the measured r4 lesson: exchange reuse does not cross a
 broadcast boundary, so chained blocks re-execute inner steps — see
 pagerank._chain_policy); one eager localCheckpoint per HALF-step bounds
 lineage and stops the twice-referenced mid-iteration auth frame from
-re-executing through its broadcast norm.
+re-executing through its broadcast norm. The half-steps keep this
+module's own loop rather than the one superstep loop of
+``streaming/supersteps.py``, which materializes whole supersteps.
 
 Zero-fill: vertices with no in-links have auth 0, no out-links hub 0 —
 the per-half-step left join targets the checkpointed state's vid column

@@ -13,8 +13,9 @@ no such boundary, so fixed-iteration supersteps chain unconditionally).
 Spark shape per superstep: state ⋈ cached out-adjacency → explode →
 map-side-combined groupBy-sum → left join back onto the checkpointed
 state's vid column (already hash-partitioned — the measured 8.1→3.8 s
-rule). Shares :func:`pagerank._iterate` (chain / check_every /
-localCheckpoint discipline) with the other three rank kernels.
+rule). Runs on the one superstep loop through ``pagerank._power_run``,
+like the PageRank kernels: convergence mode reads the step's |Δx| column;
+fixed-iteration mode chains 3 supersteps per checkpoint.
 
 At 10^12 scale: state is one double per vertex, the adjacency is cached
 once, and each superstep is one co-located shuffle — identical profile to
@@ -26,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tric_spark.operators.pagerank import _iterate
+from tric_spark.operators.pagerank import _power_run, _rank_cols, _with_prev
 
 
 def katz_centrality(
@@ -36,14 +37,12 @@ def katz_centrality(
     beta: float = 1.0,
     tol: float = 1e-6,
     max_iter: int = 100,
-    chain: int = 3,
-    check_every: int = 1,
 ) -> DataFrame:
     """(vid, rank) — Katz centrality x = β·Σ_k α^k (Aᵀ)^k·1. Init x₀ = β
     (the first step from the conventional x₀ = 0 folded in), then
     x ← β + α·Aᵀx per iteration. ``tol=0`` runs exactly ``max_iter``
     iterations (the oracle-replayable trajectory); ``tol>0`` stops when the
-    per-block max |Δ| < tol. Diverges if α ≥ 1/λ_max — caller's contract,
+    per-superstep max |Δ| < tol. Diverges if α ≥ 1/λ_max — caller's contract,
     as in every standard implementation."""
     edges = directed.select("src", "dst")
     adj = (
@@ -61,12 +60,13 @@ def katz_centrality(
             .groupBy("vid")
             .agg(F.sum("c").alias("s"))
         )
-        return rk.select("vid").join(contrib, "vid", "left").select(
+        return _with_prev(rk).join(contrib, "vid", "left").select(
             "vid",
-            (
+            *_rank_cols(
                 F.lit(float(beta))
                 + F.lit(float(alpha)) * F.coalesce("s", F.lit(0.0))
-            ).alias("rank"),
+            ),
         )
 
-    return _iterate(init, step, tol, max_iter, chain, check_every)
+    # no broadcast in the step: fixed-iteration supersteps chain 3
+    return _power_run(init, step, tol, max_iter, chain=3)

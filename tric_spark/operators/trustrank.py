@@ -22,11 +22,12 @@ the weighted adjacency is cached once; per superstep only the n-row
 (never a caller-cached vertex frame — measured r4: 8.1 s vs 3.8 s);
 dangling mass surfaces as the NULL group of the same groupBy that builds
 in-mass and teleports back to the seeds as a broadcast 1-row aggregate
-(never a driver collect). Chaining is gated off on dangling graphs
-(pagerank._chain_policy — measured 42–85 s vs 5.8 s). At 10^12 pages the
-host graph is ~10^8 rows; the rank⋈adjacency join is shuffle-on-vid
-co-located with the static adjacency partitioning and AQE splits hub
-partitions.
+(never a driver collect). It runs on the one superstep loop through
+``pagerank._power_run``; fixed-iteration chaining is gated off on
+dangling graphs (pagerank._chain_policy — measured 42–85 s vs 5.8 s). At
+10^12 pages the host graph is ~10^8 rows; the rank⋈adjacency join is
+shuffle-on-vid co-located with the static adjacency partitioning and AQE
+splits hub partitions.
 """
 
 from __future__ import annotations
@@ -34,7 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tric_spark.operators.pagerank import _chain_policy, _iterate
+from tric_spark.operators.pagerank import (
+    _chain_policy,
+    _power_run,
+    _rank_cols,
+    _with_prev,
+)
 from tric_spark.plans.lineage import checkpoint_cut
 
 
@@ -57,8 +63,6 @@ def trustrank(
     d: float = 0.85,
     tol: float = 1e-6,
     max_iter: int = 100,
-    chain: int = 3,
-    check_every: int = 1,
 ) -> DataFrame:
     """(vid, rank) — biased weighted PageRank with teleportation restricted
     to ``seeds`` (uniform 1/|S| over the seed set): u distributes trust to
@@ -83,7 +87,6 @@ def trustrank(
         .cache()
     )
     has_dangling = w_adj.count() < vertices.count()
-    chain, check_every = _chain_policy(has_dangling, chain, check_every)
 
     # teleport column joined ONCE, then carried inside checkpointed state
     vert_e = vertices.join(
@@ -110,12 +113,12 @@ def trustrank(
             )
             # rk.select("vid", "e"): exchange-free against the aggregate —
             # the checkpointed state is already hash-partitioned on vid
-            return rk.select("vid", "e").join(contribs, "vid", "left").select(
+            return _with_prev(rk, "e").join(contribs, "vid", "left").select(
                 "vid",
-                (
+                *_rank_cols(
                     F.lit(1.0 - d) * F.col("e")
                     + F.lit(d) * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ).alias("rank"),
+                ),
                 "e",
             )
         # dangling path: explode_outer emits one NULL-target row per
@@ -127,7 +130,7 @@ def trustrank(
         # re-executes (exchange reuse does not cross a broadcast boundary
         # — the measured r4 chaining lesson), so the un-cut superstep ran
         # the explode+groupBy twice. Materialize it once; the dangling
-        # branch always runs with chain=1, so this adds one cheap action
+        # branch always runs unchained, so this adds one cheap action
         # per superstep and removes a full m-row re-aggregation.
         mass = (
             rk.join(w_adj, "vid", "left")
@@ -149,23 +152,23 @@ def trustrank(
         dang = mass.filter(F.col("tvid").isNull()).agg(
             F.coalesce(F.sum("in_mass"), F.lit(0.0)).alias("_dm")
         )
-        new = rk.select("vid", "e").join(
+        new = _with_prev(rk, "e").join(
             mass.withColumnRenamed("tvid", "vid"), "vid", "left"
         ).crossJoin(F.broadcast(dang))
         return new.select(
             "vid",
-            (
+            *_rank_cols(
                 F.lit(1.0 - d) * F.col("e")
                 + F.lit(d)
                 * (
                     F.coalesce(F.col("in_mass"), F.lit(0.0))
                     + F.col("_dm") * F.col("e")
                 )
-            ).alias("rank"),
+            ),
             "e",
         )
 
-    return _iterate(ranks, step, tol, max_iter, chain, check_every).select(
+    return _power_run(ranks, step, tol, max_iter, _chain_policy(has_dangling)).select(
         "vid", "rank"
     )
 
