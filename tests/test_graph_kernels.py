@@ -165,7 +165,9 @@ def _kernel_runs(spark):
     """name → run(tol): each iterative kernel on a small graph, ``tol <= 0``
     meaning a fixed 2-superstep run (CC, which has no tol, runs 1)."""
     from tric_spark.operators.eigencentrality import eigenvector_centrality
+    from tric_spark.operators.hits import hits, salsa
     from tric_spark.operators.katz import katz_centrality
+    from tric_spark.operators.mppr import multi_personalized_pagerank
     from tric_spark.operators.pagerank import personalized_pagerank, weighted_pagerank
     from tric_spark.operators.trustrank import trustrank
 
@@ -175,6 +177,10 @@ def _kernel_runs(spark):
     all_v = spark.range(30).withColumnRenamed("id", "vid")
     sym_w = sym.withColumn("weight", (sym.src + sym.dst) % 3 + 1.0)
     seeds = spark.range(3).withColumnRenamed("id", "vid")
+    # directed with distinct hub and authority scores: every edge forward,
+    # two thirds of them also reversed
+    mixed = edges_df(spark, pairs + [(v, u) for u, v in pairs if (u + v) % 3])
+    seed_sets = spark.createDataFrame([(0, 0), (0, 1), (1, 2)], "set_id long, vid long")
 
     def it(tol):
         return 2 if tol <= 0 else 100
@@ -188,12 +194,29 @@ def _kernel_runs(spark):
         "katz": lambda tol: katz_centrality(sym, verts, alpha=0.05, tol=tol, max_iter=it(tol)),
         "eigen": lambda tol: eigenvector_centrality(sym, verts, tol=tol, max_iter=it(tol)),
         "cc": lambda tol: connected_components(sym, verts, max_iter=1 if tol <= 0 else 200),
+        "hits": lambda tol: hits(mixed, verts, tol=tol, max_iter=it(tol)),
+        "salsa": lambda tol: salsa(mixed, verts, tol=tol, max_iter=it(tol)),
+        "mppr": lambda tol: multi_personalized_pagerank(
+            sym, verts, seed_sets, tol=tol, max_iter=it(tol)
+        ),
     }
 
 
 @pytest.mark.parametrize(
     "kernel",
-    ["pagerank", "pagerank_dangling", "weighted", "ppr", "trustrank", "katz", "eigen", "cc"],
+    [
+        "pagerank",
+        "pagerank_dangling",
+        "weighted",
+        "ppr",
+        "trustrank",
+        "katz",
+        "eigen",
+        "cc",
+        "hits",
+        "salsa",
+        "mppr",
+    ],
 )
 def test_convergence_mode_adds_no_driver_actions(spark, monkeypatch, kernel):
     """Every iterative kernel runs the one superstep loop, whose convergence

@@ -8,7 +8,7 @@ from conftest import edges_df
 from fixtures import er_graph
 from oracles import salsa_oracle
 
-from tric_spark.operators.salsa import salsa
+from tric_spark.operators.hits import salsa
 
 
 def _run(spark, directed, n, **kw):

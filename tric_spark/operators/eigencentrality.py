@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tric_spark.graph import out_adjacency
 from tric_spark.operators.pagerank import _power_run, _rank_cols, _with_prev
 
 
@@ -41,12 +42,7 @@ def eigenvector_centrality(
     undirected edge list (both directions present). ``tol=0`` runs exactly
     ``max_iter`` normalized iterations — the oracle-replayable trajectory.
     """
-    adj = (
-        sym_edges.select("src", "dst")
-        .groupBy(F.col("src").alias("vid"))
-        .agg(F.collect_list("dst").alias("nbrs"))
-        .cache()
-    )
+    adj = out_adjacency(sym_edges.select("src", "dst")).cache()
     adj.count()
     init = vertices.select("vid", F.lit(1.0).alias("rank"))
 

@@ -85,26 +85,27 @@ def label_spreading(
     Scale shape: state is SPARSE long-format (vid, label, mass) — only
     reached (vertex, label) pairs exist, so early supersteps touch the
     seed frontier, not |V|×|labels|.  Per superstep: one edges⋈state
-    shuffle + one groupBy, then the clamp as anti-join ∪ seeds.  Each
-    superstep is localCheckpointed (lineage rule); the step joins the
-    edge table against the state, never the state against itself, so
-    plain localCheckpoint suffices (plans/lineage.py lore).
+    shuffle + one groupBy, then the clamp as anti-join ∪ seeds, run as a
+    fixed-length loop of the one superstep loop, which localCheckpoints
+    each superstep (lineage rule); the step joins the edge table against
+    the state, never the state against itself, so plain localCheckpoint
+    suffices (plans/lineage.py lore).
     """
     deg = degrees.select("vid", "degree")
     seed_hot = seeds.select("vid", "label", F.lit(1.0).alias("mass"))
-    state = seed_hot.localCheckpoint(eager=True)
-    for _ in range(num_iter):
+
+    def step(state: DataFrame) -> DataFrame:
         contrib = (
             sym_edges.join(state.withColumnRenamed("vid", "src"), "src")
             .join(deg.withColumnRenamed("vid", "src"), "src")
             .groupBy(F.col("dst").alias("vid"), "label")
             .agg(F.sum(F.col("mass") / F.col("degree")).alias("mass"))
         )
-        state = (
-            contrib.join(seeds.select("vid"), "vid", "left_anti")
-            .unionByName(seed_hot)
-            .localCheckpoint(eager=True)
+        return contrib.join(seeds.select("vid"), "vid", "left_anti").unionByName(
+            seed_hot
         )
+
+    state = SuperstepDriver(sym_edges.sparkSession).run(seed_hot, step, num_iter)
     w = Window.partitionBy("vid").orderBy(
         F.col("score").desc(), F.col("label").asc()
     )

@@ -13,9 +13,10 @@ Per superstep (mirrors pagerank.personalized_pagerank semantics exactly,
 per set): rank = (1−d)·e + d·(in_mass + dangling_mass·e), teleport and
 dangling both ∝ the set's uniform seed vector e. One explode-groupBy
 shuffle keyed (set_id, vid); per-set dangling mass is a |sets|-row
-aggregate joined back broadcast; eager localCheckpoint per superstep (the
-broadcast boundary rule — no chaining, as for the dangling single-set
-kernel).
+aggregate joined back broadcast. The step runs on the one superstep loop
+(``streaming/supersteps.py``, through ``pagerank._power_run``) and emits
+|Δrank| as ``_delta``; every superstep is materialized (the broadcast
+boundary rule — no chaining, as for the dangling single-set kernel).
 
 State is dense per set (k·n rows): the faithful power-iteration parity
 form. At true serving scale (millions of sets) the standard move is
@@ -30,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tric_spark.graph import out_adjacency
+from tric_spark.operators.pagerank import _power_run, _rank_cols
 
 
 def multi_personalized_pagerank(
@@ -45,8 +47,8 @@ def multi_personalized_pagerank(
     its own seeds, and its dangling mass returns to its own seeds. Empty
     input raises (a personalization needs seeds). ``tol=0`` runs exactly
     ``max_iter`` supersteps (oracle-replayable); ``tol>0`` stops when the
-    max |Δ| across ALL sets drops below tol — one scalar action per
-    superstep regardless of k."""
+    max |Δ| across ALL sets drops below tol, read from the superstep's own
+    checkpoint whatever k is."""
     seeds = seed_sets.select("set_id", "vid").distinct()
     counts = seeds.groupBy("set_id").agg(F.count(F.lit(1)).alias("_ns"))
     if counts.isEmpty():
@@ -71,10 +73,9 @@ def multi_personalized_pagerank(
     adj = out_adjacency(edges).cache()
     adj.count()
 
-    state = ev.select("set_id", "vid", F.col("e").alias("rank"), "e").localCheckpoint(
-        eager=True
-    )
-    for _ in range(max_iter):
+    init = ev.select("set_id", "vid", F.col("e").alias("rank"), "e")
+
+    def step(state: DataFrame) -> DataFrame:
         mass = (
             state.join(adj, "vid", "left")
             .select(
@@ -92,37 +93,20 @@ def multi_personalized_pagerank(
             .groupBy("set_id")
             .agg(F.sum("in_mass").alias("_dm"))
         )
-        nxt = (
-            state.select("set_id", "vid", "e")
+        rank = F.lit(1.0 - d) * F.col("e") + F.lit(d) * (
+            F.coalesce("in_mass", F.lit(0.0))
+            + F.coalesce("_dm", F.lit(0.0)) * F.col("e")
+        )
+        return (
+            state.select("set_id", "vid", "e", F.col("rank").alias("_prev"))
             .join(
                 mass.withColumnRenamed("tvid", "vid"), ["set_id", "vid"], "left"
             )
             .join(F.broadcast(dang), "set_id", "left")
-            .select(
-                "set_id",
-                "vid",
-                (
-                    F.lit(1.0 - d) * F.col("e")
-                    + F.lit(d)
-                    * (
-                        F.coalesce("in_mass", F.lit(0.0))
-                        + F.coalesce("_dm", F.lit(0.0)) * F.col("e")
-                    )
-                ).alias("rank"),
-                "e",
-            )
-            .localCheckpoint(eager=True)
+            .select("set_id", "vid", *_rank_cols(rank), "e")
         )
-        if tol > 0:
-            dl = (
-                state.select("set_id", "vid", F.col("rank").alias("r0"))
-                .join(nxt, ["set_id", "vid"])
-                .agg(F.max(F.abs(F.col("rank") - F.col("r0"))))
-                .collect()[0][0]
-            )
-            state = nxt
-            if dl < tol:
-                break
-        else:
-            state = nxt
-    return state.select("set_id", "vid", "rank")
+
+    # the per-set dangling fold is a broadcast boundary: unchained
+    return _power_run(init, step, tol, max_iter, chain=1).select(
+        "set_id", "vid", "rank"
+    )

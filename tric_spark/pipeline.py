@@ -110,12 +110,13 @@ def run_analytics(
     lp_iters: int = 5,
     include_hits: bool = False,
 ) -> dict[str, DataFrame]:
-    """All four kernels over a built graph. With ``checkpoint_dir`` the
-    iterative kernels run under resumable committed checkpoints.
+    """All four kernels over a built graph. With ``checkpoint_dir``
+    PageRank, CC and LP run under resumable committed checkpoints.
     ``include_hits=True`` adds HITS hub/authority scores over the DIRECTED
     link graph (opt-in: two shuffles per iteration on top of the default
     set, and direction-sensitive results only make sense when the caller
-    wants who-links-whom analysis rather than the undirected kernels)."""
+    wants who-links-whom analysis rather than the undirected kernels); HITS
+    runs uncommitted even with ``checkpoint_dir``."""
 
     def drv(name):
         if checkpoint_dir is None:

@@ -1,9 +1,10 @@
 """The superstep loop of every iterative kernel, with optional resumable
 checkpoints. [north-rule]
 
-PageRank (plain, weighted, personalized), TrustRank, Katz, eigenvector
-centrality, hash-min CC and label propagation all run ``state ←
-step(state)`` through :meth:`SuperstepDriver.run`; there is no second loop.
+PageRank (plain, weighted, personalized, batch multi-seed), TrustRank,
+Katz, eigenvector centrality, HITS, SALSA, hash-min CC, label propagation
+and label spreading all run ``state ← step(state)`` through
+:meth:`SuperstepDriver.run`; there is no second loop.
 A plain run (no ``checkpoint_dir``) is the same loop without resume and
 commit.
 
@@ -23,7 +24,8 @@ One materializing action per superstep. The step's own eager
 everything else the driver needs rides on it or on the commit's one write:
 
 - convergence: every step emits a ``_delta`` column (rank kernels
-  |rank − prev|, CC "label changed"); in convergence mode the driver
+  |rank − prev|, HITS/SALSA max(|Δhub|, |Δauth|), CC "label changed");
+  in convergence mode the driver
   attaches ``observe(max(_delta))`` under the checkpoint and tests that
   scalar — no second join or aggregate over old and new state. A
   fixed-length run drops the column unread;
