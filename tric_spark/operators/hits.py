@@ -39,15 +39,17 @@ table. The norms fold back in as broadcast 1-row aggregates — never a
 driver collect — exactly like PageRank's dangling-mass fold.
 
 A whole iteration is one superstep of the one superstep loop
-(``streaming/supersteps.py``, through ``pagerank._power_run``); the step
-emits |Δhub| and |Δauth| as ``_delta``, so convergence mode reads them
-from the observation on the superstep's own checkpoint. Because every
-iteration crosses TWO BroadcastExchange boundaries, supersteps are NOT
-chained (the measured r4 lesson: exchange reuse does not cross a broadcast
-boundary, so chained blocks re-execute inner steps — see
-pagerank._chain_policy), and the step materializes its mid-iteration auth
-frame itself: the hub half-step references it twice, and an
-un-materialized frame re-evaluates its broadcast norm fold per reference.
+(``streaming/supersteps.py``, through ``pagerank._power_run``), so with a
+checkpointing ``driver`` each commit, and each resume point, is one whole
+iteration. The step emits |Δhub| and |Δauth| as ``_delta``, so
+convergence mode reads them from the observation on the superstep's own
+checkpoint. Because every iteration crosses TWO BroadcastExchange
+boundaries, supersteps are NOT chained (the measured r4 lesson: exchange
+reuse does not cross a broadcast boundary, so chained blocks re-execute
+inner steps — see pagerank._chain_policy), and the step materializes its
+mid-iteration auth frame itself: the hub half-step references it twice,
+and an un-materialized frame re-evaluates its broadcast norm fold per
+reference.
 
 Zero-fill: vertices with no in-links have auth 0, no out-links hub 0 —
 the per-half-step left join targets the checkpointed state's vid column
@@ -68,7 +70,7 @@ from pyspark.sql import functions as F
 from tric_spark.graph import out_adjacency
 from tric_spark.operators.pagerank import _power_run
 from tric_spark.plans.lineage import checkpoint_cut
-from tric_spark.streaming.supersteps import DELTA
+from tric_spark.streaming.supersteps import DELTA, SuperstepDriver
 
 
 def _hub_auth(
@@ -77,6 +79,7 @@ def _hub_auth(
     tol: float,
     max_iter: int,
     stochastic: bool,
+    driver: SuperstepDriver | None,
 ) -> DataFrame:
     """(vid, hub, auth): HITS, or SALSA when ``stochastic`` (degree-divided
     contributions, L1 norms, 1/n init)."""
@@ -148,7 +151,7 @@ def _hub_auth(
             ).alias(DELTA),
         )
 
-    return _power_run(state, step, tol, max_iter, chain=1)
+    return _power_run(state, step, tol, max_iter, chain=1, driver=driver)
 
 
 def hits(
@@ -156,6 +159,7 @@ def hits(
     vertices: DataFrame,
     tol: float = 1e-6,
     max_iter: int = 50,
+    driver: SuperstepDriver | None = None,
 ) -> DataFrame:
     """(vid, hub, auth) after power iteration. ``directed`` is the directed
     link graph (src, dst) — parallel edges should be pre-deduped
@@ -167,11 +171,15 @@ def hits(
     ``tol = 0``: run exactly ``max_iter`` iterations — the
     oracle-replayable fixed-iteration mode.
 
+    ``driver``: a checkpointing superstep driver for resumable runs (one
+    commit per whole iteration); without one the same loop runs without
+    commits.
+
     An isolated graph region that is all-dangling (no edges at all) would
     make a norm 0; guarded with a 1.0 floor so the result stays all-zero
     instead of NaN (matches the oracle's NULLIF→coalesce guard).
     """
-    return _hub_auth(directed, vertices, tol, max_iter, stochastic=False)
+    return _hub_auth(directed, vertices, tol, max_iter, stochastic=False, driver=driver)
 
 
 def salsa(
@@ -179,6 +187,7 @@ def salsa(
     vertices: DataFrame,
     tol: float = 1e-6,
     max_iter: int = 50,
+    driver: SuperstepDriver | None = None,
 ) -> DataFrame:
     """(vid, hub, auth) after SALSA power iteration. ``directed`` is the
     deduped directed link graph (src, dst); ``vertices`` the full vertex
@@ -187,10 +196,10 @@ def salsa(
     Init hub = auth = 1/n (unit L1 mass — the states are distributions).
     ``tol > 0``: stop when max(|Δhub|, |Δauth|) < tol across an iteration.
     ``tol = 0``: run exactly ``max_iter`` iterations — the
-    oracle-replayable mode.
+    oracle-replayable mode. ``driver`` as in :func:`hits`.
 
     Vertices with no in-links have auth 0; with no out-links hub 0. An
     edgeless graph stays all-zero via the same nullif→1.0 norm floor as
     HITS (no NaNs).
     """
-    return _hub_auth(directed, vertices, tol, max_iter, stochastic=True)
+    return _hub_auth(directed, vertices, tol, max_iter, stochastic=True, driver=driver)

@@ -8,6 +8,16 @@ The one-call surface a user of the reference would switch to:
 
 ``run_pipeline`` additionally writes every result (and a metrics JSON) under
 an output directory — the batch-job shape for spark-submit.
+
+The kernels of one call share no data, so they run as concurrent Spark jobs
+from a thread pool, one thread per kernel (``_run_concurrently``): the
+superstep loops of PageRank, CC and LP (and HITS) each keep their own
+barriers and checkpoint dir, and the tasks of one kernel fill the cores
+another kernel's barrier leaves idle. ``run_pipeline`` runs each output as
+one task, compute then write, so the triangle kernel and the id/edge
+writes overlap the superstep barriers too. This is the Spark form of the
+reference hiding its per-round barriers behind nonblocking sends, receives
+and barrier exit (inbufastric.hpp:366–382, 809–828).
 """
 
 from __future__ import annotations
@@ -15,19 +25,26 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from tric_spark import graph
 from tric_spark.extract import outlink_edges
 from tric_spark.operators import tc
 from tric_spark.operators.cc import connected_components
+from tric_spark.operators.hits import hits
 from tric_spark.operators.lp import label_propagation
 from tric_spark.operators.pagerank import pagerank
 from tric_spark.plans.partition import partition_stats
 from tric_spark.streaming.supersteps import SuperstepDriver
+
+T = TypeVar("T")
 
 
 @dataclass
@@ -41,6 +58,7 @@ class LinkGraph:
     deg: DataFrame        # (vid, degree)
     oriented: DataFrame   # degree-ordered orientation
     verts: DataFrame      # (vid)
+    adj: DataFrame        # (vid, nbrs, out_deg): graph.out_adjacency of sym
     n_vertices: int
     n_edges: int
 
@@ -58,6 +76,16 @@ def build_link_graph(
     mandatory above ~10^9 vertices where 64-bit birthday collisions become
     certain. All analytics run unchanged on struct ids; TC auto-routes to
     the JVM join kernel (the one auto picks at that scale anyway).
+
+    ``adj`` is the adjacency PageRank, CC and LP each build as
+    ``out_adjacency(sym.select("src", "dst")).cache()``. The plans are
+    identical, so Spark's CacheManager hands all three this one cached
+    relation. With ``cache`` every view, ``adj`` included, is materialized
+    here, before :func:`run_analytics` starts the kernels concurrently.
+    A cached view still empty when a query reads it makes AQE run a job
+    that fills it; left to concurrent kernels (or to the two references of
+    ``oriented`` in one TC plan), the number of such jobs depends on
+    timing, and the Spark job count of a run drifts.
     """
     url_edges = outlink_edges(pages)
     all_urls = (
@@ -81,13 +109,19 @@ def build_link_graph(
     sym = graph.symmetrize(canon)
     deg = graph.degrees(sym)
     oriented = graph.orient_by_degree(canon, deg)
+    verts = graph.vertices(sym)
+    adj = graph.out_adjacency(sym.select("src", "dst"))
     if cache:
-        for df in (canon, sym, deg, oriented):
+        for df in (canon, sym, deg, oriented, verts, adj):
             df.cache()
     n_edges = canon.count()
-    verts = graph.vertices(sym)
+    n_vertices = verts.count()
     if cache:
-        verts.cache()
+        # fill every cached view now: run_analytics reads them from
+        # concurrent kernels, and a cache still empty when a query reads it
+        # costs that query an extra, timing-dependent fill job
+        adj.count()
+        oriented.count()
     return LinkGraph(
         ids=ids,
         directed=directed,
@@ -96,9 +130,67 @@ def build_link_graph(
         deg=deg,
         oriented=oriented,
         verts=verts,
-        n_vertices=verts.count(),
+        adj=adj,
+        n_vertices=n_vertices,
         n_edges=n_edges,
     )
+
+
+def _kernels(
+    spark: SparkSession,
+    g: LinkGraph,
+    checkpoint_dir: str | None = None,
+    pr_tol: float = 1e-6,
+    pr_max_iter: int = 100,
+    lp_iters: int = 5,
+    include_hits: bool = False,
+) -> dict[str, Callable[[], DataFrame]]:
+    """Output name → thunk running that kernel over ``g``: the one kernel
+    list of :func:`run_analytics` and :func:`run_pipeline`. Each iterative
+    kernel gets its own checkpoint dir under ``checkpoint_dir``."""
+
+    def drv(name):
+        if checkpoint_dir is None:
+            return None
+        return SuperstepDriver(spark, os.path.join(checkpoint_dir, name))
+
+    kernels = {
+        # auto: the measured r4 kernel-crossover rule (tc.pick_strategy) —
+        # Arrow self-adjacency below AUTO_ARROW_MAX_EDGES, JVM join above
+        "triangles_per_vertex": lambda: tc.triangles_per_vertex(
+            g.oriented, strategy="auto", deg=g.deg, m=g.n_edges
+        ),
+        "pagerank": lambda: pagerank(
+            g.sym, g.verts, tol=pr_tol, max_iter=pr_max_iter, driver=drv("pagerank")
+        ),
+        "components": lambda: connected_components(g.sym, g.verts, driver=drv("cc")),
+        "labels": lambda: label_propagation(
+            g.sym, g.verts, num_iter=lp_iters, driver=drv("lp")
+        ),
+    }
+    if include_hits:
+        # shares the PageRank budget knobs: both are power iterations with
+        # the same convergence/iteration semantics
+        kernels["hits"] = lambda: hits(
+            g.directed, g.verts, tol=pr_tol, max_iter=pr_max_iter, driver=drv("hits")
+        )
+    return kernels
+
+
+def _run_concurrently(
+    spark: SparkSession, tasks: dict[str, Callable[[], T]]
+) -> dict[str, T]:
+    """name → result of every task, each run on its own pool thread so
+    their Spark jobs share the cores. Every task inherits the caller's job
+    group and local properties (each wrapper takes its own copy). The call
+    returns once every task has ended; a failed task's error is re-raised
+    then, so the other kernels still finish and commit their checkpoints."""
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(task))
+            for name, task in tasks.items()
+        }
+        return {name: f.result() for name, f in futures.items()}
 
 
 def run_analytics(
@@ -110,38 +202,20 @@ def run_analytics(
     lp_iters: int = 5,
     include_hits: bool = False,
 ) -> dict[str, DataFrame]:
-    """All four kernels over a built graph. With ``checkpoint_dir``
-    PageRank, CC and LP run under resumable committed checkpoints.
-    ``include_hits=True`` adds HITS hub/authority scores over the DIRECTED
-    link graph (opt-in: two shuffles per iteration on top of the default
-    set, and direction-sensitive results only make sense when the caller
-    wants who-links-whom analysis rather than the undirected kernels); HITS
-    runs uncommitted even with ``checkpoint_dir``."""
-
-    def drv(name):
-        if checkpoint_dir is None:
-            return None
-        return SuperstepDriver(spark, os.path.join(checkpoint_dir, name))
-
-    out = {
-        # auto: the measured r4 kernel-crossover rule (tc.pick_strategy) —
-        # Arrow self-adjacency below AUTO_ARROW_MAX_EDGES, JVM join above
-        "triangles_per_vertex": tc.triangles_per_vertex(
-            g.oriented, strategy="auto", deg=g.deg, m=g.n_edges
-        ),
-        "pagerank": pagerank(
-            g.sym, g.verts, tol=pr_tol, max_iter=pr_max_iter, driver=drv("pagerank")
-        ),
-        "components": connected_components(g.sym, g.verts, driver=drv("cc")),
-        "labels": label_propagation(g.sym, g.verts, num_iter=lp_iters, driver=drv("lp")),
-    }
-    if include_hits:
-        from tric_spark.operators.hits import hits
-
-        # shares the PageRank budget knobs: both are power iterations with
-        # the same convergence/iteration semantics
-        out["hits"] = hits(g.directed, g.verts, tol=pr_tol, max_iter=pr_max_iter)
-    return out
+    """All four kernels over a built graph, run concurrently (see the
+    module docstring). PageRank, CC and LP run their superstep loops here;
+    the triangle table is returned lazy. With ``checkpoint_dir`` every
+    iterative kernel, HITS included, runs under resumable committed
+    checkpoints in its own subdirectory. ``include_hits=True`` adds HITS
+    hub/authority scores over the DIRECTED link graph (opt-in: two shuffles
+    per iteration on top of the default set, and direction-sensitive
+    results only make sense when the caller wants who-links-whom analysis
+    rather than the undirected kernels). The shared adjacency the kernels
+    read is ``g.adj``, filled by :func:`build_link_graph`."""
+    return _run_concurrently(
+        spark,
+        _kernels(spark, g, checkpoint_dir, pr_tol, pr_max_iter, lp_iters, include_hits),
+    )
 
 
 def neardup_with_metrics(
@@ -199,37 +273,50 @@ def run_pipeline(
     **analytics_kwargs,
 ) -> dict:
     """Batch-job entrypoint: build, analyze, write parquet + metrics JSON.
-    Returns the metrics dict."""
+    Returns the metrics dict.
+
+    Every output — vertex ids, edges and each kernel's table — is one
+    concurrent task that computes it and writes it; the edge-balance
+    metric is one more. Row counts and the triangle total ride the writes
+    as observed metrics: no re-read of an output and no second TC run. A
+    failing kernel fails the call after the others have finished, so a
+    rerun on the same ``checkpoint_dir`` resumes them."""
     t0 = time.time()
     g = build_link_graph(spark, pages)
     t_build = time.time() - t0
 
+    def written(name: str, compute: Callable[[], DataFrame]) -> Callable[[], dict]:
+        def task() -> dict:
+            aggs = [F.count(F.lit(1)).alias("rows")]
+            if name == "triangles_per_vertex":
+                # every triangle is counted once at each of its three corners
+                aggs.append(F.coalesce(F.sum("tc"), F.lit(0)).alias("corners"))
+            obs = Observation()
+            compute().observe(obs, *aggs).write.mode("overwrite").parquet(
+                os.path.join(out_dir, name)
+            )
+            return obs.get
+
+        return task
+
+    outputs = {
+        "vertex_ids": lambda: g.ids,
+        "edges": lambda: g.canon,
+        **_kernels(spark, g, checkpoint_dir, **analytics_kwargs),
+    }
+    tasks = {name: written(name, compute) for name, compute in outputs.items()}
+    tasks["edge_balance"] = lambda: partition_stats(g.canon)
     t0 = time.time()
-    results = run_analytics(spark, g, checkpoint_dir=checkpoint_dir, **analytics_kwargs)
-    metrics: dict = {
+    done = _run_concurrently(spark, tasks)
+    metrics = {
         "n_vertices": g.n_vertices,
         "n_edges_undirected": g.n_edges,
         "build_sec": round(t_build, 3),
-        "edge_balance": partition_stats(g.canon),
-        "outputs": {},
+        "edge_balance": done["edge_balance"],
+        "outputs": {name: done[name]["rows"] for name in outputs},
+        "analytics_sec": round(time.time() - t0, 3),
+        "triangles_total": done["triangles_per_vertex"]["corners"] // 3,
     }
-    g.ids.write.mode("overwrite").parquet(os.path.join(out_dir, "vertex_ids"))
-    g.canon.write.mode("overwrite").parquet(os.path.join(out_dir, "edges"))
-    # row counts and the triangle total ride the writes as observed metrics:
-    # no re-read of an output and no second TC run
-    observed = {}
-    for name, df in results.items():
-        aggs = [F.count(F.lit(1)).alias("rows")]
-        if name == "triangles_per_vertex":
-            # every triangle is counted once at each of its three corners
-            aggs.append(F.coalesce(F.sum("tc"), F.lit(0)).alias("corners"))
-        observed[name] = Observation()
-        df.observe(observed[name], *aggs).write.mode("overwrite").parquet(
-            os.path.join(out_dir, name)
-        )
-        metrics["outputs"][name] = observed[name].get["rows"]
-    metrics["analytics_sec"] = round(time.time() - t0, 3)
-    metrics["triangles_total"] = observed["triangles_per_vertex"].get["corners"] // 3
     with open(os.path.join(out_dir, "metrics.json"), "w") as f:
         json.dump(metrics, f, indent=2)
     return metrics
