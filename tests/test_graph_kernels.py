@@ -150,15 +150,39 @@ def test_weighted_pagerank_vs_oracle(spark):
         got[r.vid] = r.rank
     assert np.allclose(got, oracle, atol=1e-6)
 
-    # unit weights must reduce to the unweighted kernel
-    from tric_spark.operators.pagerank import pagerank
-    unit = spark.createDataFrame(
-        [(u, v, 1.0) for u, v, _ in triples], "src long, dst long, weight double"
-    )
-    w1 = {r.vid: r.rank for r in weighted_pagerank(unit, verts).collect()}
-    u1 = {r.vid: r.rank for r in pagerank(unit.select("src", "dst"), verts).collect()}
-    for v in w1:
-        assert abs(w1[v] - u1[v]) < 1e-9
+
+@pytest.mark.parametrize("shape", ["symmetric", "sinks"])
+def test_rank_kernels_reduce_to_pagerank(spark, shape):
+    """The PageRank builder's two parameters pinned against each other, on
+    the dangling-free step (symmetric) and the dangling one (sinks: u → v
+    with u < v, so the top vertices dangle): unit weights reduce the
+    weighted share to ``rank/out_deg``, and a seed set of every vertex
+    reduces the seed teleport to the uniform 1/n, also when a seed is
+    listed twice."""
+    from pyspark.sql import functions as F
+    from tric_spark.operators.pagerank import personalized_pagerank, weighted_pagerank
+    from tric_spark.operators.trustrank import trustrank
+
+    pairs = er_graph(n=30, p_inv=6)
+    if shape == "symmetric":
+        _, edges, verts = _graph_tables(spark, pairs)
+    else:
+        edges = edges_df(spark, pairs)
+        verts = spark.range(30).withColumnRenamed("id", "vid")
+    unit = edges.select("src", "dst", F.lit(1.0).alias("weight"))
+
+    def ranks(df):
+        return {r.vid: r.rank for r in df.collect()}
+
+    want = ranks(pagerank(edges, verts))
+    for run in (
+        lambda: weighted_pagerank(unit, verts),
+        lambda: personalized_pagerank(edges, verts, verts.union(verts)),
+        lambda: trustrank(unit, verts, verts),
+    ):
+        got = ranks(run())
+        assert got.keys() == want.keys()
+        assert max(abs(got[v] - want[v]) for v in want) < 1e-12
 
 
 def _kernel_runs(spark):

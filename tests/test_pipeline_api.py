@@ -98,6 +98,29 @@ def test_build_materializes_every_cached_view(spark):
     assert _cached_relation(spark, again).equals(_cached_relation(spark, g.adj))
 
 
+def test_run_analytics_caches_no_view_twice(spark, monkeypatch):
+    """The kernels' adjacency plans are the one build_link_graph caches as
+    LinkGraph.adj, so no kernel calls ``.cache()`` on an already-cached
+    plan (each such call logs "Asked to cache already cached data")."""
+    from pyspark import StorageLevel
+
+    pages = synth.pages_table(spark, 150, seed=3)
+    g = build_link_graph(spark, pages)
+    DataFrame = type(g.adj)  # the concrete class, not the pyspark.sql facade
+    orig = DataFrame.cache
+    recached = []
+
+    def recording(self):
+        if self.storageLevel != StorageLevel.NONE:
+            recached.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "cache", recording)
+    run_analytics(spark, g, pr_max_iter=2, pr_tol=0.0, lp_iters=1)
+    monkeypatch.undo()
+    assert len(recached) == 0
+
+
 def test_run_pipeline_job_count_repeats(spark, tmp_path):
     """Identical runs run identical Spark job counts, worker-thread jobs
     included (they count under the caller's job group only when the group

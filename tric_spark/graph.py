@@ -16,6 +16,7 @@ AQE handles balance; no per-row Python anywhere.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -197,6 +198,21 @@ def out_adjacency(directed: DataFrame) -> DataFrame:
     return directed.groupBy(F.col("src").alias("vid")).agg(
         F.collect_list("dst").alias("nbrs"), F.count("*").alias("out_deg")
     )
+
+
+def cache_once(df: DataFrame) -> DataFrame:
+    """``df``, cached. ``.cache()`` is called only when the plan is not
+    cached yet: Spark's CacheManager serves a cached plan to every frame
+    with that plan, and caching it again only logs "Asked to cache already
+    cached data". Adds no action: the cache fills on first use."""
+    return df.cache() if df.storageLevel == StorageLevel.NONE else df
+
+
+def cached_out_adjacency(directed: DataFrame) -> DataFrame:
+    """:func:`out_adjacency` through :func:`cache_once` — the adjacency of
+    the superstep kernels, which ``pipeline.LinkGraph.adj`` caches for
+    the pipeline's graph before they run."""
+    return cache_once(out_adjacency(directed))
 
 
 def vertices(sym_edges: DataFrame) -> DataFrame:

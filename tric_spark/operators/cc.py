@@ -34,12 +34,12 @@ def connected_components(
     would recompute part of the inner plan. The fixpoint test is the
     observed max of the step's "label changed" column — no signature
     aggregate or old⋈new join."""
-    from tric_spark.graph import out_adjacency
+    from tric_spark.graph import cached_out_adjacency
 
     comps = vertices.withColumn("comp", F.col("vid"))
     # adjacency-list form cached once: supersteps shuffle the n-row comp
     # state, not the m-row edge table; min partial-aggregates map-side
-    adj = out_adjacency(sym_edges.select("src", "dst")).cache()
+    adj = cached_out_adjacency(sym_edges.select("src", "dst"))
 
     def step(comps: DataFrame) -> DataFrame:
         nbr_min = (

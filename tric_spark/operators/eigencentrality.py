@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tric_spark.graph import out_adjacency
+from tric_spark.graph import cached_out_adjacency
 from tric_spark.operators.pagerank import _power_run, _rank_cols, _with_prev
 
 
@@ -42,7 +42,7 @@ def eigenvector_centrality(
     undirected edge list (both directions present). ``tol=0`` runs exactly
     ``max_iter`` normalized iterations — the oracle-replayable trajectory.
     """
-    adj = out_adjacency(sym_edges.select("src", "dst")).cache()
+    adj = cached_out_adjacency(sym_edges.select("src", "dst"))
     adj.count()
     init = vertices.select("vid", F.lit(1.0).alias("rank"))
 

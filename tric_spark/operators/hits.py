@@ -46,10 +46,10 @@ convergence mode reads them from the observation on the superstep's own
 checkpoint. Because every iteration crosses TWO BroadcastExchange
 boundaries, supersteps are NOT chained (the measured r4 lesson: exchange
 reuse does not cross a broadcast boundary, so chained blocks re-execute
-inner steps — see pagerank._chain_policy), and the step materializes its
-mid-iteration auth frame itself: the hub half-step references it twice,
-and an un-materialized frame re-evaluates its broadcast norm fold per
-reference.
+inner steps — see the chain rule in pagerank._rank_power), and the step
+materializes its mid-iteration auth frame itself: the hub half-step
+references it twice, and an un-materialized frame re-evaluates its
+broadcast norm fold per reference.
 
 Zero-fill: vertices with no in-links have auth 0, no out-links hub 0 —
 the per-half-step left join targets the checkpointed state's vid column
@@ -67,7 +67,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tric_spark.graph import out_adjacency
+from tric_spark.graph import cached_out_adjacency
 from tric_spark.operators.pagerank import _power_run
 from tric_spark.plans.lineage import checkpoint_cut
 from tric_spark.streaming.supersteps import DELTA, SuperstepDriver
@@ -87,10 +87,10 @@ def _hub_auth(
     if n_b == 0:
         return vertices.withColumn("hub", F.lit(0.0)).withColumn("auth", F.lit(0.0))
     edges = directed.select("src", "dst")
-    out_adj = out_adjacency(edges).cache()
-    in_adj = out_adjacency(
+    out_adj = cached_out_adjacency(edges)
+    in_adj = cached_out_adjacency(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
+    )
     out_adj.count(), in_adj.count()
 
     init = 1.0 / float(n_b) if stochastic else 1.0 / float(n_b) ** 0.5

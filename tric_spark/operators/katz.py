@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tric_spark.graph import out_adjacency
+from tric_spark.graph import cached_out_adjacency
 from tric_spark.operators.pagerank import _power_run, _rank_cols, _with_prev
 
 
@@ -45,7 +45,7 @@ def katz_centrality(
     iterations (the oracle-replayable trajectory); ``tol>0`` stops when the
     per-superstep max |Δ| < tol. Diverges if α ≥ 1/λ_max — caller's contract,
     as in every standard implementation."""
-    adj = out_adjacency(directed.select("src", "dst")).cache()
+    adj = cached_out_adjacency(directed.select("src", "dst"))
     adj.count()
     init = vertices.select("vid", F.lit(float(beta)).alias("rank"))
 

@@ -30,11 +30,11 @@ def label_propagation(
     """(vid, label) after ``num_iter`` synchronous supersteps. ``driver``:
     a checkpointing superstep driver for resumable runs; without one the
     same loop runs without commits."""
-    from tric_spark.graph import out_adjacency
+    from tric_spark.graph import cached_out_adjacency
 
     labels = vertices.withColumn("label", F.col("vid"))
     # adjacency-list form cached once (see pagerank.py for the shuffle math)
-    adj = out_adjacency(sym_edges.select("src", "dst")).cache()
+    adj = cached_out_adjacency(sym_edges.select("src", "dst"))
 
     def step(labels: DataFrame) -> DataFrame:
         freq = (

@@ -9,9 +9,10 @@ as one (set_id, vid)-keyed state — the same all-pivots-at-once discipline
 as betweenness/closeness — so k personalizations cost one superstep
 pipeline with k× the rows, not k pipelines.
 
-Per superstep (mirrors pagerank.personalized_pagerank semantics exactly,
-per set): rank = (1−d)·e + d·(in_mass + dangling_mass·e), teleport and
-dangling both ∝ the set's uniform seed vector e. One explode-groupBy
+Per superstep (the equation of pagerank._rank_power with a seed
+teleport, as personalized_pagerank runs it, per set):
+rank = (1−d)·e + d·(in_mass + dangling_mass·e), teleport and dangling
+both ∝ the set's uniform seed vector e. One explode-groupBy
 shuffle keyed (set_id, vid); per-set dangling mass is a |sets|-row
 aggregate joined back broadcast. The step runs on the one superstep loop
 (``streaming/supersteps.py``, through ``pagerank._power_run``) and emits
@@ -30,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tric_spark.graph import out_adjacency
+from tric_spark.graph import cached_out_adjacency
 from tric_spark.operators.pagerank import _power_run, _rank_cols
 
 
@@ -70,7 +71,7 @@ def multi_personalized_pagerank(
         )
     )
     edges = directed.select("src", "dst")
-    adj = out_adjacency(edges).cache()
+    adj = cached_out_adjacency(edges)
     adj.count()
 
     init = ev.select("set_id", "vid", F.col("e").alias("rank"), "e")

@@ -5,59 +5,42 @@ SURVEY §2.5: damping d=0.85, uniform 1/N init, dangling mass redistributed
 uniformly every superstep, convergence when max|r − r'| < tol. Verified
 against a dense numpy oracle with allclose(atol=1e-6).
 
+One builder, :func:`_rank_power`, runs the whole PageRank family:
+``rank = (1−d)·e + d·(in_mass + dangling_mass·e)``. It takes two
+parameters: the per-edge **share** (``rank/out_deg`` over
+``graph.out_adjacency``, or ``weight·rank/w_total`` over
+:func:`_weighted_adjacency`) and the **teleport** ``e`` (uniform 1/n as a
+literal, or a seed vector from :func:`_seed_vector` carried as a state
+column). :func:`pagerank`, :func:`weighted_pagerank`,
+:func:`personalized_pagerank` and ``trustrank.trustrank`` are adapters
+over it, and the measured rank-step rules live on its one step.
+
 Spark shape per superstep (the scale-critical part):
     mass = ranks ⋈ adjacency on vid → explode → groupBy(target).sum
 (ONE shuffle). The adjacency is cached once; per superstep only the n-row
-rank state moves. The vertex frame for the final left join is
-``rk.select("vid")`` — NOT the caller's cached vertex table: the
-checkpointed rank state is already hash-partitioned on vid, so the join
-plans exchange-free, whereas joining the cached frame re-sorts its scan at
-every chain level (measured r4 A/B: 8.1 s vs 3.8 s for 5 supersteps at
-sf0.1). Dangling vertices explode to a NULL target carrying their whole
-rank, so the SAME groupBy that builds per-vertex in-mass also yields the
-dangling mass as its NULL group (r3 ADVICE: collapses the old anti-join
-rescan; both consumers of `mass` sit above one reused exchange). The
-dangling mass re-enters the plan as a broadcast 1-row aggregate — never a
-per-superstep driver collect. Every kernel here runs on the one superstep
-loop (``streaming/supersteps.py``): convergence mode reads max|Δrank| from
-the ``_delta`` column each step emits, observed on the superstep's own
-checkpoint; fixed-iteration mode chains 3 supersteps per checkpoint, except
-on dangling graphs (see ``_chain_policy``: exchange reuse does not cross
-the BroadcastExchange boundary, so chained dangling blocks re-execute
-inner steps — measured 42 s at chain=6 vs 5.8 s per-step). At 10^12 scale
-the ranks⋈adjacency join is shuffle-on-vid co-located with the static
-adjacency partitioning, and AQE skew-join splits hub partitions.
+rank state moves. Dangling vertices explode to a NULL target carrying
+their whole rank, so the SAME groupBy that builds per-vertex in-mass also
+yields the dangling mass as its NULL group, which re-enters the plan as a
+broadcast 1-row aggregate — never a per-superstep driver collect. Every
+kernel here runs on the one superstep loop (``streaming/supersteps.py``):
+convergence mode reads max|Δrank| from the ``_delta`` column each step
+emits, observed on the superstep's own checkpoint; fixed-iteration mode
+chains 3 supersteps per checkpoint on dangling-free graphs and checkpoints
+every superstep on dangling ones. At 10^12 scale the ranks⋈adjacency join
+is shuffle-on-vid co-located with the static adjacency partitioning, and
+AQE skew-join splits hub partitions.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tric_spark.graph import cache_once, cached_out_adjacency
 from tric_spark.plans.lineage import checkpoint_cut
 from tric_spark.streaming.supersteps import DELTA, SuperstepDriver
-
-
-def _out_degrees(directed: DataFrame) -> DataFrame:
-    return directed.groupBy(F.col("src").alias("vid")).agg(
-        F.count("*").alias("out_deg")
-    )
-
-
-def _chain_policy(has_dangling: bool) -> int:
-    """Supersteps per checkpoint in fixed-iteration mode. Chaining is gated
-    OFF on dangling graphs — measured, not assumed (r4 A/B, 0.7M edges /
-    10% dangling / 6 supersteps, best-of-2): chain=1 → 5.84 s, chain=3 →
-    7.40 s, chain=6 → 42–85 s. The dangling step is single-reference, but
-    its broadcast 1-row dangling aggregate sits on a BroadcastExchange whose
-    subplan re-executes the entire inner chain per level — Spark's exchange
-    reuse does not deduplicate across the broadcast boundary, so a chained
-    block recomputes ~2^chain inner steps. One checkpoint barrier per
-    superstep is the fast path on dangling graphs; dangling-free graphs
-    chain 3 (measured 7.6→4.1 s at sf0.1)."""
-    return 1 if has_dangling else 3
 
 
 def _power_run(
@@ -88,6 +71,136 @@ def _rank_cols(rank) -> list:
     return [rank.alias("rank"), F.abs(rank - F.col("_prev")).alias(DELTA)]
 
 
+def _unit_share(x: Column) -> tuple[Column, Column]:
+    """Target and contribution of one exploded ``out_adjacency`` entry."""
+    return x, F.col("rank") / F.col("out_deg")
+
+
+def _weighted_share(x: Column) -> tuple[Column, Column]:
+    """Target and contribution of one exploded :func:`_weighted_adjacency`
+    entry: u sends v the share w(u,v)/Σ_x w(u,x) of its rank."""
+    return x["dst"], x["weight"] * F.col("rank") / F.col("w_total")
+
+
+def _weighted_adjacency(directed_w: DataFrame) -> DataFrame:
+    """(vid, nbrs [(dst, weight)], w_total) of (src, dst, weight) edges,
+    cached: the adjacency :func:`_weighted_share` reads."""
+    return cache_once(
+        directed_w.groupBy(F.col("src").alias("vid")).agg(
+            F.collect_list(F.struct("dst", "weight")).alias("nbrs"),
+            F.sum("weight").alias("w_total"),
+        )
+    )
+
+
+def _seed_vector(vertices: DataFrame, seeds: DataFrame) -> DataFrame:
+    """(vid, e): the teleport vector uniform over the distinct ``seeds`` —
+    1/|S| on a seed, 0 elsewhere. Raises ``ValueError`` on an empty seed
+    set."""
+    seeds = seeds.select("vid").distinct()
+    n_src = seeds.count()
+    if n_src == 0:
+        raise ValueError("personalized PageRank needs a non-empty seed set")
+    return vertices.join(
+        seeds.withColumn("e", F.lit(1.0 / n_src)), "vid", "left"
+    ).select("vid", F.coalesce("e", F.lit(0.0)).alias("e"))
+
+
+def _rank_power(
+    adj: DataFrame,
+    share: Callable[[Column], tuple[Column, Column]],
+    vertices: DataFrame,
+    teleport: DataFrame | None,
+    d: float,
+    tol: float,
+    max_iter: int,
+    driver: SuperstepDriver | None = None,
+    init_ranks: DataFrame | None = None,
+) -> DataFrame:
+    """(vid, rank): the power iteration every PageRank kernel runs.
+
+    ``adj``: a cached adjacency (vid, nbrs, ...) whose exploded entries
+    ``share`` maps to (target, contribution). ``teleport``: None for the
+    uniform 1/n, else a (vid, e) seed vector, which is also the initial
+    rank and rides in the state as column ``e``. ``init_ranks``: an
+    optional (vid, rank) warm start for the uniform teleport; vertices
+    missing from it start at 1/n."""
+    n_b = vertices.count()
+    if n_b == 0:
+        return vertices.withColumn("rank", F.lit(0.0))
+    n = float(n_b)
+    # dangling vertices detected ONCE — symmetric link graphs have none, and
+    # the dangling branch of the step plan is skipped entirely for them
+    has_dangling = adj.count() < n_b
+    if teleport is not None:
+        carry = ("e",)
+        init = teleport.select("vid", F.col("e").alias("rank"), "e")
+        tele = lambda c: c * F.col("e")
+    else:
+        carry = ()
+        if init_ranks is not None:
+            init = vertices.join(init_ranks.select("vid", "rank"), "vid", "left").select(
+                "vid", F.coalesce("rank", F.lit(1.0 / n)).alias("rank")
+            )
+        else:
+            init = vertices.withColumn("rank", F.lit(1.0 / n))
+        tele = lambda c: c / F.lit(n)
+
+    def step(rk: DataFrame) -> DataFrame:
+        if not has_dangling:
+            x = adj.join(rk.select("vid", "rank"), "vid")
+            x = x.select("*", F.explode("nbrs").alias("_x"))
+            tgt, c = share(F.col("_x"))
+        else:
+            # explode_outer turns a dangling vertex (nbrs NULL) into one row
+            # with a NULL target carrying its whole rank, so the one groupBy
+            # yields per-vertex in-mass AND (its NULL group) the dangling mass
+            x = rk.join(adj, "vid", "left")
+            x = x.select("*", F.explode_outer("nbrs").alias("_x"))
+            tgt, c = share(F.col("_x"))
+            c = F.when(F.col("_x").isNull(), F.col("rank")).otherwise(c)
+        mass = x.groupBy(tgt.alias("vid")).agg(F.sum(c).alias("in_mass"))
+        base = tele(F.lit(1.0 - d))
+        if has_dangling:
+            # r6: the mass aggregate feeds the output join AND the dangling
+            # fold, and the fold's BroadcastExchange re-executes its subplan
+            # (reuse does not cross a broadcast boundary), so the un-cut
+            # superstep ran the explode+groupBy twice. The dangling branch
+            # always runs unchained, so this adds one cheap action and
+            # removes a full m-row re-aggregation per superstep. It must be
+            # the stats-cutting variant: the step references rk twice, so a
+            # plain localCheckpoint's preserved origin stats SQUARE per
+            # superstep — measured: host_pagerank's convergence run threw
+            # "BigInteger would overflow supported range" with it.
+            mass = checkpoint_cut(mass)
+            dang = mass.filter(F.col("vid").isNull()).agg(
+                F.coalesce(F.sum("in_mass"), F.lit(0.0)).alias("_dm")
+            )
+            base = base + tele(F.lit(d) * F.col("_dm"))
+        # the output join runs from the checkpointed state rk, NOT the
+        # caller's cached vertex frame: rk is already hash-partitioned on
+        # vid, so the left join plans exchange-free against the mass
+        # aggregate, whereas joining a cached frame re-sorts its scan at
+        # every chain level (measured r4 A/B: 8.1 s vs 3.8 s for 5
+        # supersteps at sf0.1). The previous rank rides through the same
+        # projection for the loop's |rank − prev| convergence column, and
+        # so does a seed teleport's e.
+        out = _with_prev(rk, *carry).join(mass, "vid", "left")
+        if has_dangling:
+            out = out.crossJoin(F.broadcast(dang))
+        rank = base + F.lit(d) * F.coalesce(F.col("in_mass"), F.lit(0.0))
+        return out.select("vid", *_rank_cols(rank), *carry)
+
+    # supersteps per checkpoint in fixed-iteration mode, measured (r4 A/B,
+    # 0.7M edges / 10% dangling / 6 supersteps, best-of-2): on dangling
+    # graphs chain=1 → 5.84 s, chain=3 → 7.40 s, chain=6 → 42–85 s, because
+    # the broadcast dangling fold's subplan re-executes the entire inner
+    # chain per level (~2^chain inner steps); dangling-free graphs chain 3
+    # (7.6 → 4.1 s at sf0.1)
+    chain = 1 if has_dangling else 3
+    return _power_run(init, step, tol, max_iter, chain, driver).select("vid", "rank")
+
+
 def pagerank(
     directed: DataFrame,
     vertices: DataFrame,
@@ -113,102 +226,11 @@ def pagerank(
     Vertices absent from ``init_ranks`` (newly added pages) start at the
     uniform 1/n; extra vertices in it are ignored.
     """
-    from tric_spark.graph import out_adjacency
-
-    n_b = vertices.count()
-    if n_b == 0:
-        return vertices.withColumn("rank", F.lit(0.0))
-    n = float(n_b)
-    edges = directed.select("src", "dst")
-    # adjacency-list form, computed once and cached: per superstep only the
-    # n-row rank state shuffles (to the adjacency's partitioning), never the
-    # m-row edge table; exploded contributions partial-aggregate map-side
-    adj = out_adjacency(edges).cache()
-
-    # dangling vertices detected ONCE — symmetric link graphs have none, and
-    # the dangling branch of the step plan is skipped entirely for them
-    has_dangling = adj.count() < n_b
-
-    if init_ranks is not None:
-        ranks = (
-            vertices.join(init_ranks.select("vid", "rank"), "vid", "left")
-            .select(
-                "vid", F.coalesce("rank", F.lit(1.0 / n)).alias("rank")
-            )
-        )
-    else:
-        ranks = vertices.withColumn("rank", F.lit(1.0 / n))
-
-    def emit(
-        rk: DataFrame, mass: DataFrame, base, dang: DataFrame | None = None
-    ) -> DataFrame:
-        # the output join runs from rk.select("vid", ...), NOT the cached
-        # verts frame: the checkpointed rk is already hash-partitioned on
-        # vid, so the left join plans exchange-free against the mass
-        # aggregate; joining the cached verts instead re-sorts the cache
-        # scan every chain level (measured r4 A/B: 8.1 s vs 3.8 s for
-        # pagerank5 at sf0.1). The previous rank rides through the same
-        # projection for the loop's |rank − prev| convergence column.
-        rank = base + F.lit(d) * F.coalesce(F.col("in_mass"), F.lit(0.0))
-        new = _with_prev(rk).join(mass, "vid", "left")
-        if dang is not None:
-            new = new.crossJoin(F.broadcast(dang))
-        return new.select("vid", *_rank_cols(rank))
-
-    def step(rk: DataFrame) -> DataFrame:
-        if not has_dangling:
-            contribs = (
-                adj.join(rk, "vid")
-                .select(
-                    F.explode("nbrs").alias("vid"),
-                    (F.col("rank") / F.col("out_deg")).alias("c"),
-                )
-                .groupBy("vid")
-                .agg(F.sum("c").alias("in_mass"))
-            )
-            return emit(rk, contribs, F.lit((1.0 - d) / n))
-        # dangling path: rk joined ONCE against the cached adjacency;
-        # explode_outer turns a dangling vertex (nbrs NULL) into one row
-        # with a NULL target carrying its whole rank, so the single groupBy
-        # below produces per-vertex in-mass AND (its NULL group) the total
-        # dangling mass. Both consumers sit above the same exchange —
-        # exchange reuse computes the aggregate once per action — and the
-        # dangling mass is folded back in as a broadcast 1-row aggregate,
-        # NOT a driver collect: the step stays fully lazy and chains.
-        # r6: materialized with checkpoint_cut — the aggregate feeds the
-        # main join AND the dangling fold, and the fold's BroadcastExchange
-        # re-executes its subplan (reuse does not cross a broadcast
-        # boundary), so the un-cut superstep ran the explode+groupBy twice;
-        # the dangling branch always runs unchained, so this adds one
-        # cheap action and removes a full m-row re-aggregation per
-        # superstep. It must be the stats-cutting variant: the step
-        # references rk twice (mass build + output join), so a plain
-        # localCheckpoint's preserved origin stats SQUARE per superstep —
-        # measured: host_pagerank's convergence run threw "BigInteger
-        # would overflow supported range" (the plans/lineage.py failure
-        # mode) with plain localCheckpoint here.
-        mass = (
-            rk.join(adj, "vid", "left")
-            .select(
-                F.explode_outer("nbrs").alias("tvid"),
-                F.when(F.col("out_deg").isNull(), F.col("rank"))
-                .otherwise(F.col("rank") / F.col("out_deg"))
-                .alias("c"),
-            )
-            .groupBy("tvid")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        mass = checkpoint_cut(mass)
-        dang = mass.filter(F.col("tvid").isNull()).agg(
-            F.coalesce(F.sum("in_mass"), F.lit(0.0)).alias("_dm")
-        )
-        # rk is checkpointed every superstep here (the chain gate), so the
-        # same exchange-free output join applies as in the dangling-free
-        # branch
-        base = F.lit((1.0 - d) / n) + F.lit(d) * F.col("_dm") / F.lit(n)
-        return emit(rk, mass.withColumnRenamed("tvid", "vid"), base, dang)
-
-    return _power_run(ranks, step, tol, max_iter, _chain_policy(has_dangling), driver)
+    # the plan run_analytics' LinkGraph.adj caches, so the cache serves it
+    adj = cached_out_adjacency(directed.select("src", "dst"))
+    return _rank_power(
+        adj, _unit_share, vertices, None, d, tol, max_iter, driver, init_ranks
+    )
 
 
 def weighted_pagerank(
@@ -220,80 +242,9 @@ def weighted_pagerank(
 ) -> DataFrame:
     """(vid, rank) — PageRank where u distributes rank ∝ edge weight:
     contribution to v is r(u)·w(u,v)/Σ_x w(u,x). Input: (src, dst, weight)
-    directed edges. Same single-reference superstep shape as the unweighted
-    kernel — the weighted adjacency (vid, [(dst, weight)], Σw) is cached
-    once; dangling vertices explode to a NULL target via explode_outer, so
-    the one groupBy yields both in-mass and dangling mass."""
-    w_adj = (
-        directed_w.groupBy(F.col("src").alias("vid"))
-        .agg(
-            F.collect_list(F.struct("dst", "weight")).alias("nbrs"),
-            F.sum("weight").alias("w_total"),
-        )
-        .cache()
-    )
-    n_b = vertices.count()
-    if n_b == 0:
-        return vertices.withColumn("rank", F.lit(0.0))
-    n = float(n_b)
-    has_dangling = w_adj.count() < n_b
-    ranks = vertices.withColumn("rank", F.lit(1.0 / n))
-
-    def step(rk: DataFrame) -> DataFrame:
-        if not has_dangling:
-            contribs = (
-                w_adj.join(rk, "vid")
-                .select(
-                    F.explode("nbrs").alias("e"),
-                    (F.col("rank") / F.col("w_total")).alias("r_per_w"),
-                )
-                .select(
-                    F.col("e.dst").alias("vid"),
-                    (F.col("e.weight") * F.col("r_per_w")).alias("c"),
-                )
-                .groupBy("vid")
-                .agg(F.sum("c").alias("in_mass"))
-            )
-            # rk.select("vid"): exchange-free against the contribs aggregate
-            # (same measured reason as the unweighted kernel)
-            return _with_prev(rk).join(contribs, "vid", "left").select(
-                "vid",
-                *_rank_cols(
-                    F.lit((1.0 - d) / n)
-                    + F.lit(d) * F.coalesce("in_mass", F.lit(0.0))
-                ),
-            )
-        # r6: materialized for the same broadcast-fold recompute reason as
-        # the unweighted dangling branch (unchained, one cheap action)
-        mass = (
-            rk.join(w_adj, "vid", "left")
-            .select(
-                F.explode_outer("nbrs").alias("e"),
-                "rank",
-                "w_total",
-            )
-            .select(
-                F.col("e.dst").alias("tvid"),
-                F.when(F.col("e").isNull(), F.col("rank"))
-                .otherwise(F.col("e.weight") * F.col("rank") / F.col("w_total"))
-                .alias("c"),
-            )
-            .groupBy("tvid")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        mass = checkpoint_cut(mass)
-        dang = mass.filter(F.col("tvid").isNull()).agg(
-            F.coalesce(F.sum("in_mass"), F.lit(0.0)).alias("_dm")
-        )
-        new = _with_prev(rk).join(
-            mass.withColumnRenamed("tvid", "vid"), "vid", "left"
-        ).crossJoin(F.broadcast(dang))
-        base = F.lit((1.0 - d) / n) + F.lit(d) * F.col("_dm") / F.lit(n)
-        return new.select(
-            "vid", *_rank_cols(base + F.lit(d) * F.coalesce("in_mass", F.lit(0.0)))
-        )
-
-    return _power_run(ranks, step, tol, max_iter, _chain_policy(has_dangling))
+    directed edges."""
+    w_adj = _weighted_adjacency(directed_w)
+    return _rank_power(w_adj, _weighted_share, vertices, None, d, tol, max_iter)
 
 
 def personalized_pagerank(
@@ -305,89 +256,8 @@ def personalized_pagerank(
     max_iter: int = 100,
 ) -> DataFrame:
     """(vid, rank) — PageRank with teleportation restricted to ``sources``
-    (uniform over the seed set). Dangling mass also teleports to the seeds
-    (same single-reference NULL-target step as :func:`pagerank`). The
-    standard seed-relevance ranking for link graphs.
-
-    The superstep state carries the teleport column: schema (vid, rank, e),
-    so the per-step output join targets ``rk.select("vid", "e")`` — the
-    checkpointed state, already hash-partitioned on vid — instead of the
-    cached ``vert_e`` frame (VERDICT r4 #1: joining a cached frame re-sorts
-    its scan every chain level, the measured 8.1 s vs 3.8 s the sibling
-    kernels removed in r4; projecting an extra column preserves the state's
-    output partitioning, so the fix costs nothing)."""
-    from tric_spark.graph import out_adjacency
-
-    n_src = sources.count()
-    if n_src == 0:
-        raise ValueError("personalized_pagerank needs a non-empty source set")
-    edges = directed.select("src", "dst")
-    adj = out_adjacency(edges).cache()
-    has_dangling = adj.count() < vertices.count()
-
-    # teleport column: 1/|S| on seeds, 0 elsewhere — joined once, then
-    # carried inside the checkpointed state for the rest of the run
-    vert_e = vertices.join(
-        sources.select("vid").distinct().withColumn("e", F.lit(1.0 / n_src)), "vid", "left"
-    ).select("vid", F.coalesce("e", F.lit(0.0)).alias("e"))
-
-    ranks = vert_e.select("vid", F.col("e").alias("rank"), "e")
-
-    def step(rk: DataFrame) -> DataFrame:
-        if not has_dangling:
-            contribs = (
-                adj.join(rk.select("vid", "rank"), "vid")
-                .select(
-                    F.explode("nbrs").alias("vid"),
-                    (F.col("rank") / F.col("out_deg")).alias("c"),
-                )
-                .groupBy("vid")
-                .agg(F.sum("c").alias("in_mass"))
-            )
-            # rk.select("vid", "e"): exchange-free against the contribs
-            # aggregate (same measured reason as the sibling kernels)
-            return _with_prev(rk, "e").join(contribs, "vid", "left").select(
-                "vid",
-                *_rank_cols(
-                    F.lit(1.0 - d) * F.col("e")
-                    + F.lit(d) * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ),
-                "e",
-            )
-        # r6: materialized for the same broadcast-fold recompute reason as
-        # the plain kernel's dangling branch (unchained, one cheap action)
-        mass = (
-            rk.join(adj, "vid", "left")
-            .select(
-                F.explode_outer("nbrs").alias("tvid"),
-                F.when(F.col("out_deg").isNull(), F.col("rank"))
-                .otherwise(F.col("rank") / F.col("out_deg"))
-                .alias("c"),
-            )
-            .groupBy("tvid")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        mass = checkpoint_cut(mass)
-        dang = mass.filter(F.col("tvid").isNull()).agg(
-            F.coalesce(F.sum("in_mass"), F.lit(0.0)).alias("_dm")
-        )
-        # dangling mass teleports to the seeds (∝ e), in-plan broadcast
-        new = _with_prev(rk, "e").join(
-            mass.withColumnRenamed("tvid", "vid"), "vid", "left"
-        ).crossJoin(F.broadcast(dang))
-        return new.select(
-            "vid",
-            *_rank_cols(
-                F.lit(1.0 - d) * F.col("e")
-                + F.lit(d)
-                * (
-                    F.coalesce(F.col("in_mass"), F.lit(0.0))
-                    + F.col("_dm") * F.col("e")
-                )
-            ),
-            "e",
-        )
-
-    return _power_run(ranks, step, tol, max_iter, _chain_policy(has_dangling)).select(
-        "vid", "rank"
-    )
+    (uniform over the seed set). Dangling mass also teleports to the seeds.
+    The standard seed-relevance ranking for link graphs."""
+    e = _seed_vector(vertices, sources)
+    adj = cached_out_adjacency(directed.select("src", "dst"))
+    return _rank_power(adj, _unit_share, vertices, e, d, tol, max_iter)

@@ -16,18 +16,14 @@ Not in the reference (tric counts triangles — tric.hpp:132–177); this is
 engine breadth for the web-scale tier, where host-level TrustRank is the
 standard crawl-prioritization / index-demotion signal.
 
-Spark shape: identical to the sibling PageRank kernels (pagerank.py) —
-the weighted adjacency is cached once; per superstep only the n-row
-(vid, rank, e) state shuffles, joined against the CHECKPOINTED state
-(never a caller-cached vertex frame — measured r4: 8.1 s vs 3.8 s);
-dangling mass surfaces as the NULL group of the same groupBy that builds
-in-mass and teleports back to the seeds as a broadcast 1-row aggregate
-(never a driver collect). It runs on the one superstep loop through
-``pagerank._power_run``; fixed-iteration chaining is gated off on
-dangling graphs (pagerank._chain_policy — measured 42–85 s vs 5.8 s). At
-10^12 pages the host graph is ~10^8 rows; the rank⋈adjacency join is
-shuffle-on-vid co-located with the static adjacency partitioning and AQE
-splits hub partitions.
+Spark shape: TrustRank is ``pagerank._rank_power`` — the one PageRank
+power iteration — with the weighted share of ``weighted_pagerank`` and the
+seed teleport of ``personalized_pagerank``; the builder carries the
+measured rank-step rules (exchange-free output join on the checkpointed
+state, the cut mass aggregate under the broadcast dangling fold, chaining
+only on dangling-free graphs). At 10^12 pages the host graph is ~10^8
+rows; the rank⋈adjacency join is shuffle-on-vid co-located with the static
+adjacency partitioning and AQE splits hub partitions.
 """
 
 from __future__ import annotations
@@ -36,12 +32,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tric_spark.operators.pagerank import (
-    _chain_policy,
-    _power_run,
-    _rank_cols,
-    _with_prev,
+    _rank_power,
+    _seed_vector,
+    _weighted_adjacency,
+    _weighted_share,
 )
-from tric_spark.plans.lineage import checkpoint_cut
 
 
 def trusted_seed_hosts(hosts: DataFrame, max_digit: int = 4) -> DataFrame:
@@ -72,105 +67,10 @@ def trustrank(
 
     Input ``directed_w``: (src, dst, weight) — e.g. the host graph's
     n_links. ``vertices``: full vertex set (vid). ``seeds``: (vid) ⊆
-    vertices. State schema (vid, rank, e): the teleport column rides inside
-    the checkpointed state so every per-step join targets the
-    already-hash-partitioned state (VERDICT r4 #1 fix, inherited)."""
-    n_src = seeds.count()
-    if n_src == 0:
-        raise ValueError("trustrank needs a non-empty trusted seed set")
-    w_adj = (
-        directed_w.groupBy(F.col("src").alias("vid"))
-        .agg(
-            F.collect_list(F.struct("dst", "weight")).alias("nbrs"),
-            F.sum("weight").alias("w_total"),
-        )
-        .cache()
-    )
-    has_dangling = w_adj.count() < vertices.count()
-
-    # teleport column joined ONCE, then carried inside checkpointed state
-    vert_e = vertices.join(
-        seeds.select("vid").distinct().withColumn("e", F.lit(1.0 / n_src)),
-        "vid",
-        "left",
-    ).select("vid", F.coalesce("e", F.lit(0.0)).alias("e"))
-    ranks = vert_e.select("vid", F.col("e").alias("rank"), "e")
-
-    def step(rk: DataFrame) -> DataFrame:
-        if not has_dangling:
-            contribs = (
-                w_adj.join(rk.select("vid", "rank"), "vid")
-                .select(
-                    F.explode("nbrs").alias("ed"),
-                    (F.col("rank") / F.col("w_total")).alias("r_per_w"),
-                )
-                .select(
-                    F.col("ed.dst").alias("vid"),
-                    (F.col("ed.weight") * F.col("r_per_w")).alias("c"),
-                )
-                .groupBy("vid")
-                .agg(F.sum("c").alias("in_mass"))
-            )
-            # rk.select("vid", "e"): exchange-free against the aggregate —
-            # the checkpointed state is already hash-partitioned on vid
-            return _with_prev(rk, "e").join(contribs, "vid", "left").select(
-                "vid",
-                *_rank_cols(
-                    F.lit(1.0 - d) * F.col("e")
-                    + F.lit(d) * F.coalesce(F.col("in_mass"), F.lit(0.0))
-                ),
-                "e",
-            )
-        # dangling path: explode_outer emits one NULL-target row per
-        # dangling host carrying its whole rank, so the single groupBy
-        # yields per-vertex in-mass AND (NULL group) the dangling mass,
-        # folded back ∝ e as a broadcast 1-row aggregate — fully lazy
-        # r6: the mass aggregate feeds the main join AND the dangling fold,
-        # and the fold sits under a BroadcastExchange whose subplan
-        # re-executes (exchange reuse does not cross a broadcast boundary
-        # — the measured r4 chaining lesson), so the un-cut superstep ran
-        # the explode+groupBy twice. Materialize it once; the dangling
-        # branch always runs unchained, so this adds one cheap action
-        # per superstep and removes a full m-row re-aggregation.
-        mass = (
-            rk.join(w_adj, "vid", "left")
-            .select(
-                F.explode_outer("nbrs").alias("ed"),
-                "rank",
-                "w_total",
-            )
-            .select(
-                F.col("ed.dst").alias("tvid"),
-                F.when(F.col("ed").isNull(), F.col("rank"))
-                .otherwise(F.col("ed.weight") * F.col("rank") / F.col("w_total"))
-                .alias("c"),
-            )
-            .groupBy("tvid")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        mass = checkpoint_cut(mass)
-        dang = mass.filter(F.col("tvid").isNull()).agg(
-            F.coalesce(F.sum("in_mass"), F.lit(0.0)).alias("_dm")
-        )
-        new = _with_prev(rk, "e").join(
-            mass.withColumnRenamed("tvid", "vid"), "vid", "left"
-        ).crossJoin(F.broadcast(dang))
-        return new.select(
-            "vid",
-            *_rank_cols(
-                F.lit(1.0 - d) * F.col("e")
-                + F.lit(d)
-                * (
-                    F.coalesce(F.col("in_mass"), F.lit(0.0))
-                    + F.col("_dm") * F.col("e")
-                )
-            ),
-            "e",
-        )
-
-    return _power_run(ranks, step, tol, max_iter, _chain_policy(has_dangling)).select(
-        "vid", "rank"
-    )
+    vertices; an empty seed set raises ``ValueError``."""
+    e = _seed_vector(vertices, seeds)
+    w_adj = _weighted_adjacency(directed_w)
+    return _rank_power(w_adj, _weighted_share, vertices, e, d, tol, max_iter)
 
 
 def host_trustrank(

@@ -78,9 +78,9 @@ def build_link_graph(
     the JVM join kernel (the one auto picks at that scale anyway).
 
     ``adj`` is the adjacency PageRank, CC and LP each build as
-    ``out_adjacency(sym.select("src", "dst")).cache()``. The plans are
+    ``cached_out_adjacency(sym.select("src", "dst"))``. The plans are
     identical, so Spark's CacheManager hands all three this one cached
-    relation. With ``cache`` every view, ``adj`` included, is materialized
+    relation, and none of them caches it again. With ``cache`` every view, ``adj`` included, is materialized
     here, before :func:`run_analytics` starts the kernels concurrently.
     A cached view still empty when a query reads it makes AQE run a job
     that fills it; left to concurrent kernels (or to the two references of
