@@ -12,15 +12,14 @@ graph → TC/PR/CC/LP with checkpoints), writes parquet + metrics.
 import json
 import sys
 
-from pyspark.sql import SparkSession
+from tric_spark.session import get_spark
 
 
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/tric_spark_job_out"
-    # spark-submit provides the master; only conf is contributed here
-    spark = SparkSession.builder.appName("tric-spark-job").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    # spark-submit provides the master; get_spark contributes the engine conf
+    spark = get_spark(app_name="tric-spark-job")
 
     from tric_spark import synth
     from tric_spark.pipeline import run_pipeline
